@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from eurovision_spark.catalog import register
 from eurovision_spark.operators.textstats import md5_long, md5_long_sql, tokens
+from eurovision_spark.session import scoped_conf
 from eurovision_spark.sources import load_table
 
 P31 = 2147483647  # 2^31 - 1, Mersenne prime for the minhash universe
@@ -1096,32 +1097,30 @@ def verified_near_edges(
     analysis of that tree was costing more than some of the actions
     themselves) — and the shingle cache is released before returning."""
     # AQE off for the edge derivation's two actions (the candidate
-    # count and the edge checkpoint) — the cc_edge_list trade, with the
-    # same session-global concurrency caveat: the build's exchanges are
-    # AGGREGATIONS over bounded row shapes (band-bucket groupBy, pair
-    # distinct — AQE's skew handling applies to joins, not aggs, and a
-    # skewed band bucket means a degenerate band one fixes by widening
-    # the signature, not re-planning), so per-exchange stage
-    # materialization buys nothing while costing one ~0.2s scheduling
-    # round-trip per exchange on the bench box (SCALING.md floor
-    # measurement; 13 -> 9 jobs, consistent interleaved A/B win). The
+    # count and the edge checkpoint) — the cc_edge_list trade, scoped
+    # the same way (concurrent callers wait, never inherit it): the
+    # build's exchanges are AGGREGATIONS over bounded row shapes
+    # (band-bucket groupBy, pair distinct — AQE's skew handling applies
+    # to joins, not aggs, and a skewed band bucket means a degenerate
+    # band one fixes by widening the signature, not re-planning), so
+    # per-exchange stage materialization buys nothing while costing one
+    # ~0.2s scheduling round-trip per exchange on the bench box
+    # (SCALING.md floor measurement; 13 -> 9 jobs, consistent
+    # interleaved A/B win). The
     # DENSE verify tier is the exception — its shuffled-hash joins do
     # want AQE's runtime re-plan — so adaptivity is restored before the
     # checkpoint action when the measured count lands past the
     # payload-broadcast bound.
     spark = (docs if sets is None else sets).sparkSession
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    aqe = "spark.sql.adaptive.enabled"
+    with scoped_conf(spark, {aqe: "false"}) as prev:
         plan_edges, sets = near_edges_plan(
             docs, threshold=threshold, with_jaccard=with_jaccard, sets=sets
         )
         n_pairs = getattr(plan_edges, "_sg_n_pairs", None)
         if n_pairs is not None and n_pairs > PAIR_PAYLOAD_BROADCAST_LIMIT:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+            spark.conf.set(aqe, prev[aqe] or "true")
         edges = plan_edges.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
     # the candidate count measured inside the adaptive verify rides
     # along: cc_edge_list sizes its loop exchanges from it (edge count
     # <= pair count) without paying its own count action

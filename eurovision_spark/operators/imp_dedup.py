@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eurovision_spark.functions import nullif_empty
+from eurovision_spark.session import scoped_conf
 
 
 def connected_components_any_key(
@@ -230,11 +231,10 @@ def cc_edge_list(
     # stats never change anything, and the per-stage scheduling
     # round-trips dominate (measured 18 jobs / 1.3s for a 2-round
     # solve whose actual compute is <0.3s; the same reason GraphFrames
-    # documents disabling AQE for iterative algorithms). Restored in
-    # the finally below; the caller's own plans are unaffected.
+    # documents disabling AQE for iterative algorithms). Scoped to the
+    # loop: restored on exit, and concurrent callers wait rather than
+    # plan under it.
     spark = edges.sparkSession
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     # the round frames are ids-only (8-16 bytes/row): with AQE's
     # coalescing off, pin the loop's exchanges to few partitions so
     # each of the ~4 shuffle stages per round launches that many tasks
@@ -251,50 +251,54 @@ def cc_edge_list(
         # size from what the loop really shuffles: the 2x symmetrized
         # edge frame (plus same-order label frames)
         loop_partitions = max(8, min(max_par, (2 * n_edges) // 250_000))
-    sp_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions))
-    sym = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionByName(
-        edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    )
-    # seed with min(node, min neighbor): the first propagation round for
-    # free inside the node-dedup aggregation (star-shaped dup clusters —
-    # the common case — finish after the ONE confirming round)
-    # the seed is referenced through several branches of the round-0
-    # plan, but no eager materialization is needed: with edges a
-    # materialized leaf, ReuseExchange collapses the identical seed
-    # subtrees inside the round job (measured: an extra count() action
-    # here costs more than the reuse saves)
-    labels = (
-        sym.groupBy("node")
-        .agg(F.min("nbr").alias("_m"))
-        .select("node", F.least(F.col("node"), F.col("_m")).alias("comp"))
-        .persist()
-    )
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(loop_partitions),
+        },
+    ):
+        sym = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionByName(
+            edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
+        )
+        # seed with min(node, min neighbor): the first propagation round for
+        # free inside the node-dedup aggregation (star-shaped dup clusters —
+        # the common case — finish after the ONE confirming round)
+        # the seed is referenced through several branches of the round-0
+        # plan, but no eager materialization is needed: with edges a
+        # materialized leaf, ReuseExchange collapses the identical seed
+        # subtrees inside the round job (measured: an extra count() action
+        # here costs more than the reuse saves)
+        labels = (
+            sym.groupBy("node")
+            .agg(F.min("nbr").alias("_m"))
+            .select("node", F.least(F.col("node"), F.col("_m")).alias("comp"))
+            .persist()
+        )
 
-    def hop(lab: DataFrame) -> DataFrame:
-        """One neighbor-min round: (node, ..., comp) -> same shape with
-        comp := min(comp, min over neighbors' comp). Carries every
-        non-comp column through."""
-        nbr_min = (
-            sym.join(
-                lab.select(
-                    F.col("node").alias("nbr"), F.col("comp").alias("nbr_comp")
-                ),
-                "nbr",
+        def hop(lab: DataFrame) -> DataFrame:
+            """One neighbor-min round: (node, ..., comp) -> same shape with
+            comp := min(comp, min over neighbors' comp). Carries every
+            non-comp column through."""
+            nbr_min = (
+                sym.join(
+                    lab.select(
+                        F.col("node").alias("nbr"), F.col("comp").alias("nbr_comp")
+                    ),
+                    "nbr",
+                )
+                .groupBy("node")
+                .agg(F.min("nbr_comp").alias("_m"))
             )
-            .groupBy("node")
-            .agg(F.min("nbr_comp").alias("_m"))
-        )
-        keep = [c for c in lab.columns if c != "comp"]
-        return lab.join(nbr_min, "node", "left").select(
-            *keep,
-            F.least(F.col("comp"), F.coalesce(F.col("_m"), F.col("comp"))).alias(
-                "comp"
-            ),
-        )
+            keep = [c for c in lab.columns if c != "comp"]
+            return lab.join(nbr_min, "node", "left").select(
+                *keep,
+                F.least(F.col("comp"), F.coalesce(F.col("_m"), F.col("comp"))).alias(
+                    "comp"
+                ),
+            )
 
-    converged = False
-    try:
+        converged = False
         for i in range(max_iter):
             # two hops per action; the mid-hop label rides along as _mid so
             # the fixpoint test costs nothing extra (measured: ONE-hop
@@ -333,9 +337,6 @@ def cc_edge_list(
             if not n_changed:
                 converged = True
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_was)
     if not materialized:
         edges.unpersist()
     if not converged:

@@ -3114,8 +3114,11 @@ def ccnet_bucket_frame(
     # picks broadcast off measured sizes). Reading the total off the
     # leaf instead of a second freq reference keeps freq
     # single-consumer (no checkpoint, no re-derivation) and prices the
-    # total at one cheap array-size scan of the leaf.
-    tot = toked.agg(F.sum(F.size("_toks")).cast("double").alias("n"))
+    # total at one cheap array-size scan of the leaf. A NULL array
+    # counts 0, as explode counts it: size(NULL) is NULL under ANSI but
+    # -1 under the legacy sizeOfNull rule, so the NULL test comes first.
+    n_toks = F.when(F.col("_toks").isNull(), F.lit(0)).otherwise(F.size("_toks"))
+    tot = toked.agg(F.sum(n_toks).cast("double").alias("n"))
     scored = (
         tok.join(freq, "term")
         .crossJoin(F.broadcast(tot))

@@ -15,8 +15,15 @@ harness and a real multi-executor cluster:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# serializes every scoped session-conf change (re-entrant: a scoped
+# operator may call another)
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(app_name: str = "eurovision_spark", cpus: int | None = None) -> SparkSession:
@@ -49,3 +56,29 @@ def get_spark(app_name: str = "eurovision_spark", cpus: int | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[dict]:
+    """Set session-wide ``confs`` for the body, restore them on exit.
+
+    Session confs are global to every thread sharing ``spark``: an
+    operator that flips AQE off or pins the shuffle partitions for its
+    own loop would otherwise leak the degraded setting into whatever a
+    concurrent caller plans meanwhile. Every such change goes through
+    here: the body holds a module lock, so concurrent callers wait for
+    each other, and the previous values (unset ones included) come back
+    even when the body raises. Yields the previous values (``None`` for
+    unset), for a body that must restore one early."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield prev
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

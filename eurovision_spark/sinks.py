@@ -5,12 +5,39 @@ xlsx/CSV are driver-side edges applied to already-small query RESULTS
 (toexcel.py:124-162 semantics) — all heavy lifting stays in Spark.
 The reference's SQLite sink (scan.py:121-132) maps to ``write_jdbc``;
 its PK-duplicate swallow becomes an explicit dropDuplicates.
+
+Keyed stores (the streaming intake tier: ``upsert_parquet``,
+``delete_keys``, ``compact_parquet``) share one layout and one commit
+primitive, :func:`commit_store`:
+
+- Layout: a store is the flat directory ``path/`` whose committed data
+  are the ``*.parquet`` files directly under it — no partition
+  subdirectories, so Spark, a ``path/*.parquet`` glob and a footer scan
+  all see the same rows.
+- Append: the new rows are written as one file under ``path/_stage``
+  (hidden: Spark and the glob skip ``_`` names) and renamed into
+  ``path``. One rename commits; an empty delta commits nothing.
+- Swap: a rewrite is written once to ``path_next``, then ``path`` moves
+  to ``path_old``, ``path_next`` to ``path``, and ``path_old`` is
+  deleted.
+- Recovery: :func:`recover_store` runs before every store read and
+  commit; it finishes a swap cut between its renames and rolls back
+  anything else a crash left. After a commit returns, no ``_stage``,
+  ``_next`` or ``_old`` entry remains.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from eurovision_spark.session import scoped_conf
+
+STAGE, NEXT, OLD = "_stage", "_next", "_old"
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -75,10 +102,73 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
+def recover_store(path: str) -> None:
+    """Finish or roll back a commit on ``path`` that a crash cut short.
+
+    ``path_old`` without ``path``: the crash fell between the swap's
+    renames, and the complete ``path_next`` is renamed in. Otherwise
+    every ``path_old``, ``path_next`` and ``path/_stage`` left behind is
+    deleted: the commit either landed already or rolls back, and the
+    replay of its batch redoes it. Assumes one writer per store.
+    """
+    nxt, old = path + NEXT, path + OLD
+    if os.path.isdir(old) and not os.path.isdir(path):
+        os.rename(nxt, path)
+    for leftover in (old, nxt, os.path.join(path, STAGE)):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
+
+
+def commit_store(df: DataFrame, path: str, replace: bool = False) -> None:
+    """Commit ``df`` to the store at ``path`` (layout: module docstring).
+
+    Append (default): ``df`` lands as one file, renamed in from
+    ``path/_stage``; a file without rows is dropped. The first commit to
+    an absent store lands even an empty file, so the store carries its
+    schema. Swap (``replace=True``): ``df`` is the whole new table,
+    written to ``path_next`` and renamed in; ``df`` may read ``path``.
+    """
+    recover_store(path)
+    if replace or not os.path.isdir(path):
+        nxt, old = path + NEXT, path + OLD
+        (df if replace else df.coalesce(1)).write.mode("overwrite").parquet(nxt)
+        if os.path.isdir(path):
+            os.rename(path, old)
+            os.rename(nxt, path)
+            shutil.rmtree(old)
+        else:
+            os.rename(nxt, path)
+        return
+    import pyarrow.parquet as pq
+
+    stage = os.path.join(path, STAGE)
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    for name in os.listdir(stage):
+        f = os.path.join(stage, name)
+        if name.endswith(".parquet") and pq.read_metadata(f).num_rows:
+            os.rename(f, os.path.join(path, name))
+    shutil.rmtree(stage)
+
+
+def _anti(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """``left`` rows whose key has no match in ``right``, NULL-SAFE: the
+    plain ``left_anti`` on column names compares with ``=``, under which
+    NULL never equals NULL, so a row with any null key (child tables key
+    on the WHOLE row, and never-captured fields are null) would re-append
+    on every replay and break the exactly-once idempotency the streaming
+    ingest's at-least-once retries rely on."""
+    l, r = left.alias("l"), right.select(*keys).alias("r")
+    cond = None
+    for k in keys:
+        c = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
+        cond = c if cond is None else cond & c
+    return l.join(r, cond, "left_anti")
+
+
 def upsert_parquet(
     df: DataFrame, path: str, keys: list[str], keep: str = "existing"
 ) -> None:
-    """Keyed merge into a parquet directory — the engine's MERGE edge.
+    """Keyed merge into a parquet store — the engine's MERGE edge.
 
     ``keep="existing"``: first writer wins per key; only rows whose key
     is absent are appended (the reference's swallowed duplicate-PK
@@ -87,62 +177,39 @@ def upsert_parquet(
     unique within ``df`` (pre-aggregate upstream; this op does not pick
     among duplicate incoming rows).
 
-    Mechanics: the survivor set is existing ∪/⊖ updates via ONE
-    anti-join on the key columns, materialized to ``path + "_next"``
-    and swapped in (parquet can't be read and overwritten in the same
-    job). Honest scale note: plain parquet has no transactional MERGE,
-    so this rewrites the table; at 100 TB you partition the store and
-    rewrite only affected partitions, or use a table format with a real
-    MERGE (Delta/Iceberg) — the anti-join shape carries over unchanged.
+    Mechanics: ``keep="existing"`` reads only the key columns of the
+    store, with their types taken from ``df`` (no schema-inference job),
+    and appends the anti-join of ``df`` against them through
+    :func:`commit_store`: work and output track the batch, not the
+    store, and a replay finds every key present and commits nothing.
+    ``keep="updates"`` must rewrite: the survivor set ``df`` ∪
+    (store ⊖ ``df``) is written once and swapped in. An absent store
+    takes ``df`` as its first append. Plain parquet has no
+    transactional MERGE; a table format with a real MERGE (Delta,
+    Iceberg) would take the same anti-join shape.
     """
-    import os
-
-    spark = df.sparkSession
-    # fresh-target detection is an EXPLICIT existence check, never a
-    # swallowed read error: treating a corrupt/transient-IO read as
-    # "target absent" would overwrite the accumulated store with one
-    # incoming batch. A real read failure on an existing path must
-    # surface to the operator, who still has path_next from the last
-    # completed merge to recover from.
-    if not os.path.exists(path):
-        df.write.mode("overwrite").parquet(path)
-        return
-    existing = spark.read.parquet(path)
-
-    def anti(left: DataFrame, right: DataFrame) -> DataFrame:
-        # NULL-SAFE key match: the plain `left_anti` on column names
-        # compares with `=`, under which NULL never equals NULL — a row
-        # with any null key (child tables key on the WHOLE row, and
-        # never-captured fields are null) would re-append on every
-        # replay, breaking the exactly-once idempotency the streaming
-        # ingest's at-least-once retries rely on.
-        l, r = left.alias("l"), right.select(*keys).alias("r")
-        cond = None
-        for k in keys:
-            c = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-            cond = c if cond is None else cond & c
-        return l.join(r, cond, "left_anti")
-
-    if keep == "existing":
-        merged = existing.unionByName(anti(df, existing))
-    elif keep == "updates":
-        merged = df.unionByName(anti(existing, df))
-    else:  # pragma: no cover - guarded API
+    if keep not in ("existing", "updates"):
         raise ValueError(f"keep must be 'existing' or 'updates', got {keep!r}")
-    merged.write.mode("overwrite").parquet(path + "_next")
-    spark.read.parquet(path + "_next").write.mode("overwrite").parquet(path)
+    spark = df.sparkSession
+    recover_store(path)
+    if not os.path.isdir(path):
+        commit_store(df, path)
+    elif keep == "existing":
+        held = spark.read.schema(T.StructType([df.schema[k] for k in keys])).parquet(path)
+        commit_store(_anti(df, held, keys), path)
+    else:
+        existing = spark.read.schema(df.schema).parquet(path)
+        commit_store(df.unionByName(_anti(existing, df, keys)), path, replace=True)
 
 
 def delete_keys(spark, path: str, key: str, victims: DataFrame) -> None:
-    """Keyed DELETE from a parquet directory — the retirement edge of
-    the incremental stores (refresh_corpus): rewrite ``path`` without
-    the rows whose ``key`` appears in ``victims``. One left-anti join,
-    same staging-swap mechanics (and the same honest scale note) as
-    :func:`upsert_parquet`; a missing store or an empty victim set is a
-    no-op."""
-    import os
-
-    if not os.path.exists(path):
+    """Keyed DELETE from a parquet store — the retirement edge of the
+    incremental stores (refresh_corpus): the store without the rows
+    whose ``key`` appears in ``victims``, committed by the swap form of
+    :func:`commit_store` (one left-anti join, written once). A missing
+    store is a no-op."""
+    recover_store(path)
+    if not os.path.isdir(path):
         return
     existing = spark.read.parquet(path)
     # a USING-column join (anti included) moves the join key to the
@@ -151,8 +218,7 @@ def delete_keys(spark, path: str, key: str, victims: DataFrame) -> None:
     kept = existing.join(victims.select(key), key, "left_anti").select(
         *existing.columns
     )
-    kept.write.mode("overwrite").parquet(path + "_next")
-    spark.read.parquet(path + "_next").write.mode("overwrite").parquet(path)
+    commit_store(kept, path, replace=True)
 
 
 def write_sqlite(tables: dict[str, DataFrame], db_path: str) -> None:
@@ -169,8 +235,6 @@ def write_sqlite(tables: dict[str, DataFrame], db_path: str) -> None:
     export edge like xlsx.
     """
     import sqlite3
-
-    from pyspark.sql import types as T
 
     con = sqlite3.connect(db_path)
     try:
@@ -232,16 +296,13 @@ def compact_parquet(
     metadata. Compaction is the periodic maintenance pass that
     restores ~128 MB scan units. Round-robin repartition (not
     coalesce: coalesce merges by locality and can leave skewed
-    outputs), staged to ``_next`` then swapped in with a directory
-    rename — parquet can't be read and overwritten in one job, and a
-    Spark rewrite of the staged copy would re-split it by input
-    splits, losing the file-count contract. The rename swap is the
-    local-FS stand-in for an object-store manifest flip (table
-    formats make this step transactional)."""
+    outputs), committed by the swap form of :func:`commit_store` —
+    parquet can't be read and overwritten in one job, and the rename
+    swap is the local-FS stand-in for an object-store manifest flip
+    (table formats make this step transactional)."""
     import math
-    import os
-    import shutil
 
+    recover_store(path)
     total = 0
     for root, _dirs, names in os.walk(path):
         total += sum(
@@ -250,13 +311,7 @@ def compact_parquet(
             if f.endswith(".parquet")
         )
     n = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(path + "_next")
-    # swap order matters: rename the live copy ASIDE, rename the new one
-    # in, THEN delete — at no instant is there zero live copies (rm-first
-    # would destroy the dataset if the process died before the rename)
-    os.rename(path, path + "_old")
-    os.rename(path + "_next", path)
-    shutil.rmtree(path + "_old")
+    commit_store(spark.read.parquet(path).repartition(n), path, replace=True)
     return n
 
 
@@ -319,8 +374,6 @@ def rewrite_dirty_shards(
     driver-side (the bounded dir list, not data).
 
     Returns (n_dirty_dirs, n_rows_written)."""
-    import shutil
-
     def digests(m: DataFrame) -> DataFrame:
         h = F.conv(
             F.substring(
@@ -372,9 +425,7 @@ def rewrite_dirty_shards(
         .join(F.broadcast(dirty_df), ["split", "shard"], "left_semi")
         .join(docs.select("doc_id", "text"), "doc_id")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             rows.repartition(F.col("split"), F.col("shard"))
             .sortWithinPartitions("split", "shard", "pos")
@@ -382,8 +433,6 @@ def rewrite_dirty_shards(
             .partitionBy("split", "shard")
             .parquet(out_dir)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     n_rows = sum(
         spark.read.parquet(f"{out_dir}/split={s}/shard={k}").count() for s, k in dirty
     )

@@ -579,8 +579,10 @@ def stream_incremental_dedup(
        cost tracks batch size, never store size;
     3. upsert the decisions, land survivors ('new') into ``landed/``
        and append their index + signature rows — all first-wins keyed
-       upserts, so a replayed micro-batch (restart, at-least-once
-       source) re-derives the same decisions and changes nothing;
+       upserts, each committed as one appended file (sinks.commit_store:
+       the write tracks the batch, never the store), so a replayed
+       micro-batch (restart, at-least-once source) re-derives the same
+       decisions and changes nothing;
     4. maintain ``clusters/``: every verified (incoming, landed) pair —
        near or exact — becomes an edge (node, current cluster label of
        the landed side); a batch-sized connected-components pass
@@ -620,11 +622,21 @@ def stream_incremental_dedup(
     )
 
 
+DECISIONS_DDL = "doc_id bigint, decision string, matched_id bigint"
+CLUSTERS_DDL = "doc_id bigint, cluster_id bigint"
+
+
 def _read_store_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """A keyed store (sinks.commit_store layout) read with the schema its
+    caller already knows — no schema-inference job — after recovering
+    any interrupted commit; an absent store reads as empty."""
     import os
 
-    if os.path.exists(path):
-        return spark.read.parquet(path)
+    from eurovision_spark.sinks import recover_store
+
+    recover_store(path)
+    if os.path.isdir(path):
+        return spark.read.schema(ddl).parquet(path)
     return spark.createDataFrame([], ddl)
 
 
@@ -713,13 +725,13 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     # decisions FIRST, survivors second — and survivors re-read the
     # decisions STORE rather than the in-flight plan. Order matters:
     # the decisions plan lazily scans the index stores, and
-    # rewriting them first would invalidate any cache of the plan
-    # (the file listing changes), silently re-deciding the batch
+    # committing to them first would change the file listing a
+    # re-planned scan sees, silently re-deciding the batch
     # against a store that already contains it (every 'new' doc
     # would then exact-dup itself).
     upsert_parquet(decisions, decisions_dir, ["doc_id"], keep="existing")
     new_ids = (
-        spark.read.parquet(decisions_dir)
+        _read_or_empty(decisions_dir, DECISIONS_DDL)
         .filter(F.col("decision") == "new")
         .select("doc_id")
     )
@@ -736,21 +748,25 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     # + the in-batch exact collapses (batch CC on the union would see
     # the identical-text edge, so the twin must too — the chain
     # member -> in-batch rep -> landed match resolves transitively in
-    # the same mini-CC). Self-pairs only arise on REPLAY (the batch
-    # is already in the index and matches itself) — filtered so a
-    # replay can't fabricate self-cluster rows.
+    # the same mini-CC). A probe match whose landed side is one of the
+    # batch's OWN docs only arises on REPLAY (the batch is already in
+    # the index): the first run never probed the batch against itself
+    # (the in-batch near pass is elided), so such matches — self-pairs
+    # and in-batch near pairs alike — are dropped, and a replay
+    # re-derives exactly the first run's edges.
+    own = grouped.select(F.col("doc_id").alias("ex_id"))
     dup_pairs = (
         near_pairs.unionByName(
             exact.select(
                 F.col("doc_id").alias("inc_id"), F.col("exact_id").alias("ex_id")
             )
         )
+        .join(own, "ex_id", "left_anti")
         .unionByName(
             collapsed.select(
                 F.col("doc_id").alias("inc_id"), F.col("matched_id").alias("ex_id")
             )
         )
-        .filter(F.col("inc_id") != F.col("ex_id"))
         .distinct()
     )
     if dup_pairs.isEmpty():
@@ -771,7 +787,7 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         ["src", "dst"],
         keep="existing",
     )
-    cl = _read_or_empty(clusters_dir, "doc_id bigint, cluster_id bigint")
+    cl = _read_or_empty(clusters_dir, CLUSTERS_DDL)
     # current label of each matched landed doc (itself if unlabeled)
     old = dup_pairs.join(
         cl.select(F.col("doc_id").alias("ex_id"), "cluster_id"), "ex_id", "left"
@@ -847,12 +863,9 @@ def assign_splits_batch(
     splits_dir = os.path.join(store_dir, "splits")
     conflicts_dir = os.path.join(store_dir, "split_conflicts")
 
-    clusters = _read_store_or_empty(
-        spark, clusters_dir, "doc_id bigint, cluster_id bigint"
-    )
-    splits = _read_store_or_empty(
-        spark, splits_dir, "doc_id bigint, split string, via string"
-    )
+    splits_ddl = "doc_id bigint, split string, via string"
+    clusters = _read_store_or_empty(spark, clusters_dir, CLUSTERS_DDL)
+    splits = _read_store_or_empty(spark, splits_dir, splits_ddl)
     new_docs = batch_ids.select("doc_id").join(
         splits.select("doc_id"), "doc_id", "left_anti"
     )
@@ -895,7 +908,12 @@ def assign_splits_batch(
     watch = touched.unionByName(batch_clusters).distinct()
     msplits = (
         clusters.join(watch, "cluster_id", "leftsemi")
-        .join(spark.read.parquet(splits_dir).select("doc_id", "split"), "doc_id")
+        .join(
+            _read_store_or_empty(spark, splits_dir, splits_ddl).select(
+                "doc_id", "split"
+            ),
+            "doc_id",
+        )
     )
     conf = (
         msplits.groupBy("cluster_id")
@@ -918,10 +936,10 @@ def assign_splits_batch(
     # of its keys against the live label set per batch keeps every
     # quarantine row naming a CURRENT cluster (the merged cluster's
     # new label re-enters via `watch` in the same batch that merged it).
+    quarantine = _read_store_or_empty(spark, conflicts_dir, "cluster_id bigint")
     if os.path.exists(conflicts_dir):
         stale = (
-            spark.read.parquet(conflicts_dir)
-            .select("cluster_id")
+            quarantine.select("cluster_id")
             .join(clusters.select("cluster_id").distinct(), "cluster_id", "left_anti")
         )
         if not stale.isEmpty():
@@ -1020,7 +1038,7 @@ def refresh_corpus(
     import os
 
     from eurovision_spark.operators.pipeline import digest_delta
-    from eurovision_spark.sinks import delete_keys
+    from eurovision_spark.sinks import commit_store, delete_keys
 
     landed_dir = os.path.join(store_dir, "landed")
     index_dir = os.path.join(store_dir, "index")
@@ -1039,9 +1057,7 @@ def refresh_corpus(
         .select("doc_id")
         .localCheckpoint()
     )
-    dec = _read_store_or_empty(
-        spark, decisions_dir, "doc_id bigint, decision string, matched_id bigint"
-    )
+    dec = _read_store_or_empty(spark, decisions_dir, DECISIONS_DDL)
     # orphans: decision targets retired, the doc itself survives in v2
     orphans = (
         dec.join(
@@ -1066,9 +1082,7 @@ def refresh_corpus(
     # the touched subgraph, so refresh cost keeps tracking the delta.
     delete_keys(spark, edges_dir, "src", retired.withColumnRenamed("doc_id", "src"))
     delete_keys(spark, edges_dir, "dst", retired.withColumnRenamed("doc_id", "dst"))
-    cl = _read_store_or_empty(
-        spark, clusters_dir, "doc_id bigint, cluster_id bigint"
-    )
+    cl = _read_store_or_empty(spark, clusters_dir, CLUSTERS_DDL)
     if os.path.exists(clusters_dir):
         from eurovision_spark.operators.imp_dedup import cc_edge_list
 
@@ -1103,10 +1117,7 @@ def refresh_corpus(
                     F.col("comp").alias("cluster_id"),
                 )
             ).localCheckpoint()
-        rebuilt.write.mode("overwrite").parquet(clusters_dir + "_next")
-        spark.read.parquet(clusters_dir + "_next").write.mode("overwrite").parquet(
-            clusters_dir
-        )
+        commit_store(rebuilt, clusters_dir, replace=True)
     # re-intake the delta (plus orphans) through the live probe path
     batch_ids = (
         delta.filter(F.col("status").isin("added", "changed"))
@@ -1174,12 +1185,9 @@ def stream_vector_dedup(
         batch = batch_df.withColumn("nv", l2norm(F.col("v"))).withColumn(
             "bucket", _sign_bucket(F.col("v"), range(N_PLANES))
         )
-        if not os.path.exists(landed_dir):
-            ex = spark.createDataFrame(
-                [], "vec_id bigint, v array<double>, nv double, bucket bigint"
-            )
-        else:
-            ex = spark.read.parquet(landed_dir)
+        ex = _read_store_or_empty(
+            spark, landed_dir, "vec_id bigint, v array<double>, nv double, bucket bigint"
+        )
         cand = batch.select("vec_id", "v", "nv", "bucket").join(
             ex.select(
                 F.col("vec_id").alias("ex_id"),
@@ -1218,7 +1226,9 @@ def stream_vector_dedup(
         # listing and re-decide the batch against itself)
         upsert_parquet(decisions, decisions_dir, ["vec_id"], keep="existing")
         survivors = batch.select("vec_id", "v", "nv", "bucket").join(
-            spark.read.parquet(decisions_dir)
+            _read_store_or_empty(
+                spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
+            )
             .filter(F.col("decision") == "new")
             .select("vec_id"),
             "vec_id",
@@ -1227,10 +1237,7 @@ def stream_vector_dedup(
         # --- cluster maintenance: the vector twin of the document path
         if near_pairs.isEmpty():
             return
-        if os.path.exists(clusters_dir):
-            cl = spark.read.parquet(clusters_dir)
-        else:
-            cl = spark.createDataFrame([], "vec_id bigint, cluster_id bigint")
+        cl = _read_store_or_empty(spark, clusters_dir, "vec_id bigint, cluster_id bigint")
         old = near_pairs.join(
             cl.select(F.col("vec_id").alias("ex_id"), "cluster_id"), "ex_id", "left"
         ).select(
@@ -1335,15 +1342,12 @@ def stream_span_dedup(
     blockindex_dir = os.path.join(store_dir, "blockindex")
     stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
-    def _read_or_empty(path: str, ddl: str) -> DataFrame:
-        if os.path.exists(path):
-            return spark.read.parquet(path)
-        return spark.createDataFrame([], ddl)
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         blk = doc_blocks(batch_df).localCheckpoint()
         rows = block_rows(batch_df).localCheckpoint()
-        ex = _read_or_empty(blockindex_dir, "bh bigint, doc_id bigint, bi int")
+        ex = _read_store_or_empty(
+            spark, blockindex_dir, "bh bigint, doc_id bigint, bi int"
+        )
         # store hits: every occurrence of an already-owned hash is cut —
         # except the owner row itself (replay: the batch's own blocks
         # are already in the index and must not erase themselves)

@@ -722,6 +722,43 @@ def test_ccnet_buckets_tercile_invariants(spark):
         assert min(buckets["middle"]) >= max(buckets["tail"]), source
 
 
+def test_ccnet_corpus_total_counts_null_token_arrays_as_zero(spark):
+    """The corpus total ``n`` comes from per-row array sizes while the
+    vocabulary counts come from explode, which drops a NULL ``_toks``
+    row. The two must agree: every score is mean(log(c / n)) with ``n``
+    the exploded token count — also with ANSI off, where size(NULL)
+    would say -1."""
+    import math
+
+    from eurovision_spark.operators.textstats import ccnet_bucket_frame
+    from eurovision_spark.session import scoped_conf
+
+    rows = [
+        (1, "s", ["a", "b", "a"]),
+        (2, "s", ["b", "c"]),
+        (3, "s", ["a"]),
+        (4, "s", None),
+    ]
+    toked = spark.createDataFrame(rows, "doc_id bigint, source string, _toks array<string>")
+    freq = defaultdict(int)
+    for _, _, toks in rows:
+        for t in toks or []:
+            freq[t] += 1
+    n = sum(freq.values())
+    want = {
+        d: round(sum(math.log(freq[t] / n) for t in toks) / len(toks), 4)
+        for d, _, toks in rows
+        if toks
+    }
+    for ansi in ("true", "false"):
+        with scoped_conf(spark, {"spark.sql.ansi.enabled": ansi}):
+            got = {
+                r.doc_id: r.avg_logprob
+                for r in ccnet_bucket_frame(None, toked=toked).collect()
+            }
+        assert got == want, (ansi, got, want)
+
+
 def test_ccnet_approx_agrees_with_exact(spark):
     """The scale-safe cut-point tercile vs the exact ntile, on the
     corpus AND on a planted frame. Planted: every score distinct and

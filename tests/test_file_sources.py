@@ -4,6 +4,9 @@ against the parquet-native path."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -122,6 +125,186 @@ def test_upsert_parquet_policies_and_replay_idempotence(spark, tmp_path):
     upsert_parquet(upd, path, ["k"], keep="updates")
     got2 = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert got2 == {1: "a", 2: "B", 3: "c"}  # incoming k=2 replaces
+
+
+KV = "k long, v string"
+# base (fresh append), first-wins append, last-wins swap, keyed delete
+UPSERT_STEPS = [
+    ([(1, "a"), (2, "b")], "existing"),
+    ([(2, "B"), (3, "c")], "existing"),
+    ([(3, "C"), (4, "d")], "updates"),
+    ([(4, None)], "delete"),
+]
+CLEAN_STATES = [
+    {1: "a", 2: "b"},
+    {1: "a", 2: "b", 3: "c"},
+    {1: "a", 2: "b", 3: "C", 4: "d"},
+    {1: "a", 2: "b", 3: "C"},
+]
+
+
+class Crash(Exception):
+    pass
+
+
+def _run_step(spark, path, i, frame=None):
+    from eurovision_spark.sinks import delete_keys, upsert_parquet
+
+    rows, keep = UPSERT_STEPS[i]
+    df = frame if frame is not None else spark.createDataFrame(rows, KV)
+    if keep == "delete":
+        delete_keys(spark, path, "k", df)
+    else:
+        upsert_parquet(df, path, ["k"], keep=keep)
+
+
+def _store(spark, path):
+    from eurovision_spark.streaming.ingest import _read_store_or_empty
+
+    return {r.k: r.v for r in _read_store_or_empty(spark, path, KV).collect()}
+
+
+def _leftovers(tmp_path, name):
+    """Staging entries a commit may leave: ``_stage`` inside the store,
+    ``_next`` / ``_old`` beside it."""
+    inside = [e for e in os.listdir(tmp_path / name) if e.startswith("_stage")]
+    beside = [e for e in os.listdir(tmp_path) if e != name]
+    return inside + beside
+
+
+def _fail_once(real, pred):
+    state = {"armed": True}
+
+    def fake(*args, **kwargs):
+        if state["armed"] and pred(*args):
+            state["armed"] = False
+            raise Crash(args)
+        return real(*args, **kwargs)
+
+    return fake
+
+
+# (failing call, predicate on its arguments, step it fires in)
+CRASH_POINTS = {
+    # the fresh store's staged copy never renamed in
+    "fresh_commit_rename": ("rename", lambda src, dst: src.endswith("_next"), 0),
+    # the append's staged file never renamed into the store
+    "append_commit_rename": ("rename", lambda src, dst: "_stage" in src, 1),
+    # the append committed, its staging directory not yet deleted
+    "append_stage_cleanup": ("rmtree", lambda p, *a: p.endswith("_stage"), 1),
+    # between the swap's renames: live copy aside, new copy not yet in
+    "swap_between_renames": (
+        "rename",
+        lambda src, dst: src.endswith("_next") and os.path.isdir(dst + "_old"),
+        2,
+    ),
+    # the swap committed, the swapped-out copy not yet deleted
+    "swap_old_cleanup": ("rmtree", lambda p, *a: p.endswith("_old"), 3),
+}
+
+
+@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+def test_store_commit_crash_then_replay_equals_clean_run(spark, tmp_path, monkeypatch, point):
+    """The store-commit contract (sinks.commit_store): a crash at any
+    step of a commit leaves the store reading as either its state
+    before the commit or after it — never a mix — and replaying the
+    interrupted step, then the rest, ends at exactly the clean run's
+    store, with no staging entry left behind."""
+    import shutil
+
+    what, pred, at = CRASH_POINTS[point]
+    path = str(tmp_path / "tbl")
+    for i in range(len(UPSERT_STEPS)):
+        if i != at:
+            _run_step(spark, path, i)
+            continue
+        mod, name = (os, "rename") if what == "rename" else (shutil, "rmtree")
+        with monkeypatch.context() as m:
+            m.setattr(mod, name, _fail_once(getattr(mod, name), pred))
+            with pytest.raises(Crash):
+                _run_step(spark, path, i)
+        before = CLEAN_STATES[i - 1] if i else {}
+        assert _store(spark, path) in (before, CLEAN_STATES[i])
+        _run_step(spark, path, i)  # the at-least-once replay
+        assert _store(spark, path) == CLEAN_STATES[i]
+    assert _store(spark, path) == CLEAN_STATES[-1]
+    assert _leftovers(tmp_path, "tbl") == []
+
+
+def test_store_commit_failed_staged_write_then_replay(spark, tmp_path):
+    """A Spark write that dies before the staged file is complete (a
+    task error mid-write) commits nothing; the replay lands the rows
+    once."""
+    from pyspark.sql.functions import udf
+
+    path = str(tmp_path / "tbl")
+    _run_step(spark, path, 0)
+
+    @udf("string")
+    def boom(v):
+        raise ValueError("task died mid-write")
+
+    bad = spark.createDataFrame(UPSERT_STEPS[1][0], KV).withColumn("v", boom("v"))
+    with pytest.raises(Exception, match="task died mid-write"):
+        _run_step(spark, path, 1, frame=bad)
+    assert _store(spark, path) == CLEAN_STATES[0]
+    for i in range(1, len(UPSERT_STEPS)):
+        _run_step(spark, path, i)
+    assert _store(spark, path) == CLEAN_STATES[-1]
+    assert _leftovers(tmp_path, "tbl") == []
+
+
+def test_store_append_adds_one_file_per_nonempty_delta(spark, tmp_path):
+    """Append commits stay flat and small: N appends add at most N
+    ``*.parquet`` files directly under the store, a delta with no new
+    key (a replay) adds none, and no staging entry survives."""
+    from eurovision_spark.sinks import upsert_parquet
+
+    path = str(tmp_path / "tbl")
+
+    def files():
+        return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+    upsert_parquet(spark.range(0, 40).selectExpr("id AS k", "'x' AS v"), path, ["k"])
+    assert len(files()) == 1
+    for n in range(1, 4):
+        batch = spark.range(n * 10, n * 10 + 40).selectExpr("id AS k", "'y' AS v")
+        upsert_parquet(batch, path, ["k"])
+        assert len(files()) == 1 + n
+        assert _leftovers(tmp_path, "tbl") == []
+        held = files()
+        upsert_parquet(batch, path, ["k"])  # replay: empty delta
+        assert files() == held
+    assert spark.read.parquet(path).count() == 70
+    assert not [e for e in os.listdir(path) if os.path.isdir(os.path.join(path, e))]
+
+
+def test_store_reads_and_first_wins_upsert_launch_no_schema_job(spark, tmp_path):
+    """Job-count pin of the store paths: a store read with its known
+    schema launches no job at all (no schema-inference pass), and a
+    first-wins upsert into an existing store — key-only read, anti-join,
+    one staged file — launches at most 2 (measured: the anti-join's
+    broadcast plus the write), so a schema-inference job or a second
+    write shows as a failure here."""
+    from eurovision_spark.sinks import upsert_parquet
+    from eurovision_spark.streaming.ingest import _read_store_or_empty
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "tbl")
+    upsert_parquet(spark.range(0, 200).selectExpr("id AS k", "'x' AS v"), path, ["k"])
+    upd = spark.range(150, 300).selectExpr("id AS k", "'y' AS v")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("store-read", lambda: _read_store_or_empty(spark, path, KV)) == 0
+    assert jobs("store-append", lambda: upsert_parquet(upd, path, ["k"])) <= 2
+    assert spark.read.parquet(path).count() == 300
 
 
 def test_orc_roundtrip_matches_parquet(spark, tmp_path):

@@ -841,6 +841,42 @@ def test_stream_cluster_store_replay_stable(spark, tmp_path):
     assert spark.read.parquet(str(store / "clusters")).count() == 2
 
 
+def test_intake_replay_of_batch_with_in_batch_near_pair_changes_no_store(
+    spark, tmp_path
+):
+    """A batch holding a near-dup pair of its own lands both docs: the
+    in-batch near pass is elided by design, so the first run derives no
+    edge. Replaying it finds both docs already landed; those matches
+    against the batch's own ids must be dropped like self-pairs, or the
+    replay fabricates the edge and cluster rows the first run never
+    wrote. Every store's row count must be unchanged by the replay."""
+    import os
+
+    from eurovision_spark.streaming.ingest import intake_batch
+
+    store = str(tmp_path / "store")
+    x = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    far = "one two three four five six seven eight nine ten eleven twelve"
+    batch = spark.createDataFrame(
+        [(1, x), (2, x + " perturbed"), (3, far)], "doc_id bigint, text string"
+    )
+    stores = ("landed", "index", "sigindex", "decisions", "clusters", "edges")
+
+    def counts() -> dict[str, int]:
+        return {
+            name: spark.read.parquet(os.path.join(store, name)).count()
+            if os.path.isdir(os.path.join(store, name))
+            else 0
+            for name in stores
+        }
+
+    intake_batch(spark, store, batch)
+    first = counts()
+    assert first["landed"] == 3 and first["edges"] == 0, first
+    intake_batch(spark, store, batch)
+    assert counts() == first
+
+
 def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
     """Vector twin of the cluster store: three waves of rescaled copies
     (cosine 1.0, scale-invariant sign buckets) build one transitive
