@@ -26,10 +26,21 @@ from pyspark.sql import SparkSession
 _CONF_LOCK = threading.RLock()
 
 
+def host_heap() -> str:
+    """Default driver heap: half the host's physical RAM, at least 1g and
+    at most 24g. The cap: at 8g a local[32] bench showed GC-pressure
+    jitter (one text-heavy query per run randomly 5-10x slower warm),
+    and 24g held the whole suite spike-free on a 128 GiB host; a fixed
+    24g on a smaller host promises the JVM more than the host has."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024**3
+    return f"{min(24, max(1, ram_gb // 2))}g"
+
+
 def get_spark(app_name: str = "eurovision_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS, then all local cores.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS, then all local cores; the
+    driver heap to $SPARK_GRAFT_DRIVER_MEM, then :func:`host_heap`.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -42,10 +53,7 @@ def get_spark(app_name: str = "eurovision_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 24g: at 8g the local[32] bench showed GC-pressure jitter — one
-        # text-heavy query per run randomly 5-10x slower warm; 24g holds
-        # the whole suite spike-free (the box carries 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # NOTE: no nanosAsLong here — events.ts's physical type is

@@ -150,6 +150,29 @@ def commit_store(df: DataFrame, path: str, replace: bool = False) -> None:
     shutil.rmtree(stage)
 
 
+def _read_committed(spark, path: str) -> DataFrame:
+    """The store at ``path`` read with the schema in one committed file's
+    footer, so the read launches no schema-inference job. The footer's
+    Spark schema record wins when a Spark writer left one: the arrow
+    mapping alone reads a zone-less timestamp (Spark's ``timestamp_ntz``)
+    back as ``timestamp``. A directory with no parquet file directly
+    under it (a partitioned table) is read with inference."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    if not files:
+        return spark.read.parquet(path)
+    footer = pq.read_schema(os.path.join(path, files[0]))
+    recorded = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    schema = (
+        T.StructType.fromJson(json.loads(recorded)) if recorded else from_arrow_schema(footer)
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def _anti(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
     """``left`` rows whose key has no match in ``right``, NULL-SAFE: the
     plain ``left_anti`` on column names compares with ``=``, under which
@@ -211,7 +234,7 @@ def delete_keys(spark, path: str, key: str, victims: DataFrame) -> None:
     recover_store(path)
     if not os.path.isdir(path):
         return
-    existing = spark.read.parquet(path)
+    existing = _read_committed(spark, path)
     # a USING-column join (anti included) moves the join key to the
     # front of the output — re-select the original order so repeated
     # deletes on different keys never reorder the store's columns
@@ -311,7 +334,7 @@ def compact_parquet(
             if f.endswith(".parquet")
         )
     n = max(1, math.ceil(total / target_file_bytes))
-    commit_store(spark.read.parquet(path).repartition(n), path, replace=True)
+    commit_store(_read_committed(spark, path).repartition(n), path, replace=True)
     return n
 
 

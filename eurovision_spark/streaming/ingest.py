@@ -1199,12 +1199,15 @@ def stream_vector_dedup(
         )
         cos = dot(F.col("v"), F.col("ev")) / (F.col("nv") * F.col("en"))
         # materialized BEFORE any store write (the plan reads landed_dir;
-        # a rewrite would invalidate its file listing); the self-pair
-        # filter keeps a replayed batch — already in the store — from
-        # matching itself
+        # a rewrite would invalidate its file listing). A match whose
+        # landed side is one of the batch's OWN vectors only arises on
+        # replay (the first run never probed the batch against itself),
+        # so such matches — self-pairs and in-batch near pairs alike —
+        # are dropped, as intake_batch does
+        own = batch.select(F.col("vec_id").alias("ex_id"))
         near_pairs = (
             cand.filter(cos >= NEAR_DUP_THRESHOLD)
-            .filter(F.col("vec_id") != F.col("ex_id"))
+            .join(own, "ex_id", "left_anti")
             .select("vec_id", "ex_id")
             .localCheckpoint()
         )

@@ -284,9 +284,11 @@ def test_store_reads_and_first_wins_upsert_launch_no_schema_job(spark, tmp_path)
     schema launches no job at all (no schema-inference pass), and a
     first-wins upsert into an existing store — key-only read, anti-join,
     one staged file — launches at most 2 (measured: the anti-join's
-    broadcast plus the write), so a schema-inference job or a second
-    write shows as a failure here."""
-    from eurovision_spark.sinks import upsert_parquet
+    broadcast plus the write), and so does a keyed delete, which reads
+    the store with the schema in a file's footer (measured: 2, the
+    schema-inference read took 3); so a schema-inference job or a
+    second write shows as a failure here."""
+    from eurovision_spark.sinks import delete_keys, upsert_parquet
     from eurovision_spark.streaming.ingest import _read_store_or_empty
 
     sc = spark.sparkContext
@@ -305,6 +307,9 @@ def test_store_reads_and_first_wins_upsert_launch_no_schema_job(spark, tmp_path)
     assert jobs("store-read", lambda: _read_store_or_empty(spark, path, KV)) == 0
     assert jobs("store-append", lambda: upsert_parquet(upd, path, ["k"])) <= 2
     assert spark.read.parquet(path).count() == 300
+    victims = spark.range(0, 100).selectExpr("id AS k")
+    assert jobs("store-delete", lambda: delete_keys(spark, path, "k", victims)) <= 2
+    assert spark.read.parquet(path).count() == 200
 
 
 def test_orc_roundtrip_matches_parquet(spark, tmp_path):

@@ -1206,3 +1206,39 @@ def test_bm25_postings_build_in_row(spark):
             any(k.startswith("doc_id") for k in keys)
             and any(k.startswith("term") for k in keys)
         ), m
+
+
+def test_search_export_reuses_sorted_sheet_without_shuffle_or_sort(spark, tmp_path):
+    """Once a table set's sheet exists, a trial-only search is a
+    broadcast semi-join of the sheet against the hit keys: the sheet's
+    leaf keeps its range partitioning and sort order on eudract_id, so
+    the exported rows come out sorted with no shuffle Exchange and no
+    Sort in the plan."""
+    from eurovision_spark.plans.search import DISPLAY_TRIAL, search_and_export
+
+    rows = [
+        {**{c: "" for c in DISPLAY_TRIAL}, "eudract_id": f"2004-{i}", "condition": c}
+        for i, c in enumerate(["diabetes", "asthma", "diabetes", "gout"])
+    ]
+    children = {
+        "imp": ([("2004-1", "t", "p", "c")], "eudract_id string, trade string, "
+                "product string, code string"),
+        "sponsor": ([("2004-1", "Acme", "", "", "")], "eudract_id string, name string, "
+                    "org string, contact string, email string"),
+        "location": ([("2004-2", "Japan")], "eudract_id string, location string"),
+    }
+    spark.createDataFrame(rows).write.parquet(str(tmp_path / "trial"))
+    for name, (data, ddl) in children.items():
+        spark.createDataFrame(data, ddl).write.parquet(str(tmp_path / name))
+    tables = {n: spark.read.parquet(str(tmp_path / n)) for n in ["trial", *children]}
+    search_and_export(tables).collect()  # builds the sheet
+
+    df = search_and_export(tables, trial_where="condition = 'diabetes'")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "LeftSemi" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert not re.search(r"\bSort\b", plan), plan
+    assert [r.eudract_id for r in df.collect()] == ["2004-0", "2004-2"]

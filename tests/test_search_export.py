@@ -114,3 +114,69 @@ def test_excel_sink_fallback(tables, tmp_path):
     assert os.path.exists(tmp_path / "export.xlsx") or os.path.exists(
         str(tmp_path / "export.xlsx") + ".csv"
     )
+
+
+def _write_tables(tables, root):
+    """``tables`` written as parquet under ``root``, read back."""
+    spark = tables["trial"].sparkSession
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(str(root / name))
+    return {name: spark.read.parquet(str(root / name)) for name in tables}
+
+
+def test_sheet_memo_sees_a_rewritten_table(tables, tmp_path):
+    """The sheet is kept per table set; a table rewritten at the same path
+    and read again is a new table (new file names), so the export shows
+    its new rows."""
+    from eurovision_spark.plans.search import search_and_export
+
+    frames = _write_tables(tables, tmp_path)
+    before = {r.eudract_id: r.location for r in search_and_export(frames).collect()}
+    assert before["2004-1"] == "Austria, Belgium"
+    spark = tables["trial"].sparkSession
+    spark.createDataFrame(
+        [("2004-1", "Chile"), ("2004-2", "Denmark")], "eudract_id string, location string"
+    ).write.mode("overwrite").parquet(str(tmp_path / "location"))
+    frames["location"] = spark.read.parquet(str(tmp_path / "location"))
+    after = {r.eudract_id: r.location for r in search_and_export(frames).collect()}
+    assert after == {"2004-1": "Chile", "2004-2": "Denmark", "2004-3": ""}
+
+
+def test_sheet_memo_alternating_table_sets_get_their_own_rows(tables):
+    """The memo holds one table set: alternating between two that differ
+    in one in-memory table replaces the entry each time, and neither
+    set's export shows the other's rows."""
+    from eurovision_spark.plans.search import search_and_export
+
+    spark = tables["trial"].sparkSession
+    other = dict(
+        tables,
+        sponsor=spark.createDataFrame(
+            [("2004-2", "Other Sponsor", "", "", "")],
+            "eudract_id string, name string, org string, contact string, email string",
+        ),
+    )
+    for _ in range(2):
+        got = {r.eudract_id: r.sponsor for r in search_and_export(tables).collect()}
+        assert got == {"2004-1": "Acme Pharma", "2004-2": "", "2004-3": "Zeta Bio"}
+        got = {r.eudract_id: r.sponsor for r in search_and_export(other).collect()}
+        assert got == {"2004-1": "", "2004-2": "Other Sponsor", "2004-3": ""}
+
+
+def test_sheet_memo_concurrent_searches_get_identical_rows(tables, tmp_path):
+    """Two threads search a table set whose sheet neither has built yet:
+    both wait on one build and get the serial rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from eurovision_spark.plans.search import search_and_export
+
+    preds = [{}, {"trial_where": "condition = 'diabetes'"}, {"location_where": "location = 'Japan'"}]
+
+    def run(frames):
+        return [[tuple(r) for r in search_and_export(frames, **p).collect()] for p in preds]
+
+    want = run(tables)
+    frames = _write_tables(tables, tmp_path)
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(run, [frames, frames]))
+    assert got == [want, want]

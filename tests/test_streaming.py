@@ -922,6 +922,56 @@ def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
     assert spark.read.parquet(str(store / "clusters")).count() == 3
 
 
+def test_vector_replay_of_batch_with_in_batch_near_pair_changes_no_store(
+    spark, tmp_path
+):
+    """Vector twin of the intake replay test: a wave holding a rescaled
+    pair of its own lands both vectors and derives no cluster (no
+    in-batch near pass). Its replay finds both already landed; those
+    matches against the wave's own ids must be dropped like self-pairs,
+    or the replay writes cluster rows the first run never wrote."""
+    import os
+    import shutil
+
+    from eurovision_spark.streaming.ingest import stream_vector_dedup
+
+    vecs_dir = tmp_path / "vecs_in"
+    vecs_dir.mkdir()
+    store = tmp_path / "store"
+    va = [float(i % 7 - 3) + 0.25 for i in range(64)]
+    vb = [float((i * 3) % 11 - 5) - 0.5 for i in range(64)]
+    wave = [(1, va), (2, [x * 2.0 for x in va]), (3, vb)]
+    stores = ("landed", "decisions", "clusters")
+
+    def write_wave(name, rows):
+        spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
+        part = next((tmp_path / name).glob("part-*.parquet"))
+        shutil.copy(part, vecs_dir / f"{name}.parquet")
+
+    def counts() -> dict[str, int]:
+        return {
+            name: spark.read.parquet(str(store / name)).count()
+            if os.path.isdir(store / name)
+            else 0
+            for name in stores
+        }
+
+    write_wave("w1", wave)
+    q = stream_vector_dedup(spark, str(vecs_dir), str(store), str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        first = counts()
+        write_wave("w1_replay", wave)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert first == {"landed": 3, "decisions": 3, "clusters": 0}, first
+    assert counts() == first
+
+
 def test_stream_quality_gate_equals_batch_classifier(spark, sf_dir, tmp_path):
     """The learned quality filter scores an arriving document stream
     with weights trained offline on the landed corpus, and must agree
