@@ -82,8 +82,8 @@ def search_trials(
     return hits
 
 
-# the one memoized sheet: (tables, their inputFiles(), sheet)
-_SHEET: tuple[dict[str, DataFrame], dict[str, list[str]], DataFrame] | None = None
+# the one memoized sheet: (tables, sheet)
+_SHEET: tuple[dict[str, DataFrame], DataFrame] | None = None
 _SHEET_LOCK = threading.Lock()
 
 
@@ -130,37 +130,22 @@ def _sheet_frame(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _same_table(held: DataFrame, files: list[str], df: DataFrame) -> bool:
-    """``df`` reads what ``held`` read: same session, same analyzed plan,
-    same files. A rewrite at the same path changes the file names; an
-    in-memory frame has no files and compares by its plan alone."""
-    return held is df or (
-        held.sparkSession is df.sparkSession
-        and held.sameSemantics(df)
-        and sorted(df.inputFiles()) == files
-    )
-
-
 def _sheet(tables: dict[str, DataFrame]) -> DataFrame:
     """The sheet of ``tables``, sorted by eudract_id and materialized;
     built on the first call for a table set and reused while later
-    calls pass the same tables (one entry: another table set replaces
-    it). A frame sees the files it listed when it was read, so re-read
-    a table after rewriting it."""
+    calls pass the identical DataFrame objects (one entry: another
+    table set replaces it). Re-read a table to see a rewrite."""
     global _SHEET
     with _SHEET_LOCK:
-        if _SHEET is not None and all(
-            _same_table(_SHEET[0][n], _SHEET[1][n], tables[n]) for n in TABLES
-        ):
-            return _SHEET[2]
+        if _SHEET is not None and all(_SHEET[0][n] is tables[n] for n in TABLES):
+            return _SHEET[1]
         spark = tables["trial"].sparkSession
         # with AQE off the checkpoint leaf keeps the range partitioning
         # and the sort order, so a search's orderBy needs no Exchange
         # and no Sort; under AQE it reports neither
         with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
             sheet = _sheet_frame(tables).orderBy("eudract_id").localCheckpoint()
-        held = {n: tables[n] for n in TABLES}
-        _SHEET = (held, {n: sorted(df.inputFiles()) for n, df in held.items()}, sheet)
+        _SHEET = ({n: tables[n] for n in TABLES}, sheet)
         return sheet
 
 

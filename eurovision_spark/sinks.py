@@ -151,26 +151,23 @@ def commit_store(df: DataFrame, path: str, replace: bool = False) -> None:
 
 
 def _read_committed(spark, path: str) -> DataFrame:
-    """The store at ``path`` read with the schema in one committed file's
-    footer, so the read launches no schema-inference job. The footer's
-    Spark schema record wins when a Spark writer left one: the arrow
-    mapping alone reads a zone-less timestamp (Spark's ``timestamp_ntz``)
-    back as ``timestamp``. A directory with no parquet file directly
-    under it (a partitioned table) is read with inference."""
+    """The store at ``path`` read with the Spark schema recorded in one
+    committed file's footer, so the read launches no schema-inference
+    job. A directory with no parquet file directly under it (a
+    partitioned table) or a file with no Spark schema record (not
+    written by Spark) is read with inference."""
     import json
 
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
     if not files:
         return spark.read.parquet(path)
     footer = pq.read_schema(os.path.join(path, files[0]))
     recorded = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
-    schema = (
-        T.StructType.fromJson(json.loads(recorded)) if recorded else from_arrow_schema(footer)
-    )
-    return spark.read.schema(schema).parquet(path)
+    if not recorded:
+        return spark.read.parquet(path)
+    return spark.read.schema(T.StructType.fromJson(json.loads(recorded))).parquet(path)
 
 
 def _anti(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:

@@ -1198,16 +1198,19 @@ def stream_vector_dedup(
             "bucket",
         )
         cos = dot(F.col("v"), F.col("ev")) / (F.col("nv") * F.col("en"))
-        # materialized BEFORE any store write (the plan reads landed_dir;
-        # a rewrite would invalidate its file listing). A match whose
-        # landed side is one of the batch's OWN vectors only arises on
-        # replay (the first run never probed the batch against itself),
-        # so such matches — self-pairs and in-batch near pairs alike —
-        # are dropped, as intake_batch does
-        own = batch.select(F.col("vec_id").alias("ex_id"))
+        # materialized BEFORE any store write (the plan reads landed_dir
+        # and decisions_dir; a rewrite would invalidate its file
+        # listing). An incoming vector that already has a decision was
+        # decided by an earlier batch, so a replay of it adds no edges:
+        # its matches (self-pairs and, when its batch held its own near
+        # pair, the pair partner) are dropped, while a fresh vector in
+        # the same batch keeps its match to a re-sent landed one
+        decided = _read_store_or_empty(
+            spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
+        ).select("vec_id")
         near_pairs = (
             cand.filter(cos >= NEAR_DUP_THRESHOLD)
-            .join(own, "ex_id", "left_anti")
+            .join(decided, "vec_id", "left_anti")
             .select("vec_id", "ex_id")
             .localCheckpoint()
         )

@@ -397,6 +397,36 @@ def test_compact_parquet_restores_target_file_count(spark, tmp_path):
     assert spark.read.parquet(frag).count() == before
 
 
+def test_compact_parquet_reads_non_spark_parquet_with_inference(spark, tmp_path):
+    """A parquet file written by another tool carries no Spark schema
+    record in its footer; compaction reads it the way Spark infers it,
+    unsigned ints and zone-less timestamps included."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eurovision_spark.sinks import compact_parquet
+
+    frag = tmp_path / "foreign"
+    frag.mkdir()
+    stamp = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    for i in range(3):
+        pq.write_table(
+            pa.table({
+                "k": pa.array([i], pa.uint32()),
+                "ts": pa.array([stamp], pa.timestamp("us")),
+            }),
+            frag / f"part-{i}.parquet",
+        )
+    want = spark.read.parquet(str(frag))
+    want_schema, want_rows = want.schema, sorted(want.collect())
+    assert compact_parquet(spark, str(frag)) == 1
+    got = spark.read.parquet(str(frag))
+    assert got.schema == want_schema
+    assert sorted(got.collect()) == want_rows
+
+
 def test_csv_header_recognized_with_quotes_and_spacing(spark, tmp_path):
     """Headers that differ from the synthesized spelling — quoted cells,
     spacing after separators — must still be dropped as headers, not

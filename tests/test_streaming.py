@@ -972,6 +972,47 @@ def test_vector_replay_of_batch_with_in_batch_near_pair_changes_no_store(
     assert counts() == first
 
 
+def test_vector_wave_resending_a_landed_vector_keeps_a_fresh_near_copys_match(
+    spark, tmp_path
+):
+    """A wave that re-sends landed vector 1 together with a fresh rescaled
+    copy 2 of it: only the re-sent vector's matches are dropped (it was
+    decided earlier), so 2 is still decided near_dup of 1 and the two
+    share a cluster, as if 1 had not been re-sent."""
+    import shutil
+
+    from eurovision_spark.streaming.ingest import stream_vector_dedup
+
+    vecs_dir = tmp_path / "vecs_in"
+    vecs_dir.mkdir()
+    store = tmp_path / "store"
+    va = [float(i % 7 - 3) + 0.25 for i in range(64)]
+    vb = [float((i * 3) % 11 - 5) - 0.5 for i in range(64)]
+
+    def write_wave(name, rows):
+        spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
+        part = next((tmp_path / name).glob("part-*.parquet"))
+        shutil.copy(part, vecs_dir / f"{name}.parquet")
+
+    write_wave("w1", [(1, va), (3, vb)])
+    q = stream_vector_dedup(spark, str(vecs_dir), str(store), str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        write_wave("w2", [(1, va), (2, [x * 2.0 for x in va])])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def rows(name):
+        return sorted(tuple(r) for r in spark.read.parquet(str(store / name)).collect())
+
+    assert rows("decisions") == [(1, "new", None), (2, "near_dup", 1), (3, "new", None)]
+    assert [r[0] for r in rows("landed")] == [1, 3]
+    assert rows("clusters") == [(1, 1), (2, 1)]
+
+
 def test_stream_quality_gate_equals_batch_classifier(spark, sf_dir, tmp_path):
     """The learned quality filter scores an arriving document stream
     with weights trained offline on the landed corpus, and must agree
