@@ -175,8 +175,9 @@ def main() -> None:
     # load_suspect re-time: when a query's reps disagree >=2x AND a
     # floor probe taken at that moment reads >2.5x the session's quiet
     # floor, the burst likely ate a rep — take ONE more timed rep
-    # (still min-of-N, nothing cached) and record the query + the probe
-    # value in the detail line's load_suspect map.
+    # (still min-of-N, nothing cached) and record the query with
+    # [probe, min before the re-time, min after] in the detail line's
+    # load_suspect map.
     def _getload() -> float | None:
         try:
             return round(os.getloadavg()[0], 2)
@@ -205,7 +206,7 @@ def main() -> None:
         floor_init = _floor_probe(5)
     except Exception:  # noqa: BLE001 — instrumentation never kills the bench
         floor_init = None
-    load_suspect: dict[str, float] = {}
+    load_suspect: dict[str, list[float]] = {}
 
     # Two passes per query: the first (cold) pays Catalyst analysis +
     # whole-stage-codegen compilation — a per-plan constant that
@@ -262,12 +263,17 @@ def main() -> None:
                     # the pre-pass value — a pass that STARTS loaded would
                     # otherwise inflate its own burst threshold
                     if probe > 2.5 * min(floor_probes):
-                        load_suspect[name] = probe
+                        # [probe, min before, min after]: the re-timed min
+                        # has one more rep than its neighbours', so the
+                        # entry keeps the same-rep-count number beside it
+                        before = round(min(runs), 3)
+                        load_suspect[name] = [probe, before, before]
                         t0 = time.time()
                         fn(spark, sf_dir).write.format("noop").mode(
                             "overwrite"
                         ).save()
                         runs.append(time.time() - t0)
+                        load_suspect[name][2] = round(min(runs), 3)
                 except Exception:  # noqa: BLE001
                     pass
             warm[name] = round(min(runs), 3)
@@ -374,7 +380,7 @@ def format_output(
     heavy: dict | None = None,
     load1: list[float | None] | None = None,
     floor_probes: list[float] | None = None,
-    load_suspect: dict[str, float] | None = None,
+    load_suspect: dict[str, list[float]] | None = None,
 ) -> list[str]:
     """Two lines, DETAIL first, COMPACT last: the driver records only
     the LAST 2000 characters of stdout, and the single-line form kept

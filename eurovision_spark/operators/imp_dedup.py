@@ -18,9 +18,11 @@ group:
 - :func:`connected_components_any_key` (unbounded components): a
   star-edge reduction (per (group, key, value) set, everyone links to
   the min entry) onto the shared edge-list engine
-  :func:`cc_edge_list` — two-hop rounds with a fused fixpoint test,
-  pointer doubling for O(log diameter) convergence, no GraphFrames
-  dependency.
+  :func:`cc_edge_list`, which picks its path by the graph's size: up
+  to ``LOCAL_CC_EDGES`` edges, one bounded Arrow collect and a driver
+  union-find (~1 job); above it, two-hop Spark rounds with a fused
+  fixpoint test and pointer doubling for O(log diameter) convergence.
+  No GraphFrames dependency.
 
 Survivor policy (deterministic, order-insensitive):
 - trade / product: shortest non-empty value, ties -> lexicographic min
@@ -31,11 +33,23 @@ Survivor policy (deterministic, order-insensitive):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from eurovision_spark.functions import nullif_empty
 from eurovision_spark.session import scoped_conf
+
+# graphs of at most this many edges are labeled on the driver (see
+# cc_edge_list). Measured on 4 cores, star-shaped 5-node clusters in a
+# materialized leaf, labels counted once, warm medians: the driver path
+# takes 0.31-0.45 s from 1k to 20k edges, 0.8-0.9 s at 30-50k and
+# 1.35 s at 100k; the Spark rounds take 1.0-1.45 s warm at every size
+# and 2.0-3.5 s cold. The warm crossover lies between 50k and 100k
+# edges, and this bound keeps the driver path at under half the rounds'
+# warm time.
+LOCAL_CC_EDGES = 20_000
 
 
 def connected_components_any_key(
@@ -95,18 +109,44 @@ def cc_edge_list(
     every endpoint with the min node id reachable through the graph.
     Returns (node, comp) — one row per distinct endpoint.
 
-    Min-label propagation, TWO hops per Spark action, with pointer
-    doubling from round 2 on: each round applies the neighbor-min hop
-    twice (the mid-hop label rides along as a column, so one O(1)-row
-    aggregate reads both sums — labels only decrease, so equal sums ==
-    exact hop-fixpoint, detected INSIDE the same action that computed
-    it). The common near-dup graph (shallow near-cliques, where the
+    Two paths, selected by the input's size. SMALL GRAPHS (at most
+    ``LOCAL_CC_EDGES`` edges, e.g. a streaming batch's 5-10 dup edges)
+    are labeled on the driver: one bounded Arrow collect
+    (``limit(LOCAL_CC_EDGES + 1)``, one job whatever the partition
+    count; skipped when ``n_edges_hint`` already exceeds the bound), a
+    union-find whose roots are their set's min id, and a label frame
+    built on the JVM from a ``pyarrow.Table`` — a plan leaf held by the
+    driver, so it survives executor loss under either ``reliable``
+    setting, and it changes no session conf. At these sizes a caller
+    waits on per-job scheduling, not on data: each propagation round
+    below is ~4 jobs plus its fixpoint collect, so the rounds cost
+    1.0-1.45 s warm (2-3.5 s cold) where the driver path takes
+    0.3-0.45 s up to 20k edges; the warm crossover lies between 50k and
+    100k edges (4 cores; measurements beside the constant), and the
+    bound sits well below it. The driver path serves only id types
+    whose Python order equals Spark's ``least``/``min`` (integral ids,
+    binary-collated strings, structs of those, e.g. the
+    ``(group, entry)`` nodes of :func:`connected_components_any_key`)
+    and graphs with no NULL id; everything else, and every graph above
+    the bound, takes the Spark rounds — the only path that can serve a
+    corpus-sized graph. A non-materialized input is persisted before
+    the collect, so a fallback does not recompute it.
+
+    The Spark rounds: min-label propagation, TWO hops per Spark action,
+    with pointer doubling from round 2 on: each round applies the
+    neighbor-min hop twice (the mid-hop label rides along as a column,
+    so one O(1)-row aggregate reads both sums — labels only decrease, so
+    equal sums == exact hop-fixpoint, detected INSIDE the same action
+    that computed it). The common near-dup graph (shallow near-cliques, where the
     closed-neighborhood seed is 0–1 hops from the fixpoint) therefore
     converges in ONE action after the seed. Deeper graphs engage the
     ``comp := comp(comp)`` path-halving jump from round 2, so reach
     grows geometrically and convergence is O(log diameter) rounds, not
     O(diameter) — a 200-hop chain converges well inside the default
-    max_iter (pinned in tests/test_pipeline_ops.py).
+    max_iter (pinned in tests/test_pipeline_ops.py). That holds when ids
+    run monotone along a chain; with ids shuffled along it the jump
+    buys little (measured: a 100-node path needs 31-60 rounds, a
+    200-node path does not converge in 15).
 
     Every round shuffles ids only, never payloads — the formulation
     that survives a 100 TB corpus — and the label frame is
@@ -160,8 +200,9 @@ def cc_edge_list(
     verify's measured candidate count bounds its verified edges)
     passes it to skip the sizing count action entirely.
 
-    CONCURRENCY NOTE: the AQE toggle and shuffle-partition pin are
-    SESSION-GLOBAL confs (Spark has no per-query scope for them);
+    CONCURRENCY NOTE (Spark rounds only; the driver path sets no conf
+    and takes no ``scoped_conf`` lock): the AQE toggle and
+    shuffle-partition pin are SESSION-GLOBAL confs (Spark has no per-query scope for them);
     both are restored in a ``finally``, but a query planned
     CONCURRENTLY on the same SparkSession during the loop inherits
     the degraded settings. The engine's own call sites are serialized
@@ -214,6 +255,13 @@ def cc_edge_list(
     # The cached payload is ids-only, tiny at any corpus size.
     if not materialized:
         edges = edges.persist()
+    if n_edges_hint is None or n_edges_hint <= LOCAL_CC_EDGES:
+        labels = _driver_cc(edges, src, dst)
+        if labels is not None:
+            if not materialized:
+                edges.unpersist()
+            return labels
+    if not materialized:
         n_edges = edges.count()
     elif n_edges_hint is not None:
         # the caller already measured (or upper-bounded) the edge
@@ -353,6 +401,101 @@ def cc_edge_list(
     # there, not just a speedup). leaf=False callers (see docstring)
     # read the persist cache directly.
     return _truncate(labels) if leaf else labels
+
+
+def _driver_orderable(dt: T.DataType) -> bool:
+    """True when Python orders ``dt``'s collected values exactly as
+    Spark's ``least``/``min`` do: integral ids, binary-collated strings
+    (UTF-8 byte order is code-point order, which is Python's), and
+    structs of those (field-by-field, as Python tuples compare)."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return True
+    if isinstance(dt, T.StringType):
+        return dt.collation == "UTF8_BINARY"
+    if isinstance(dt, T.StructType):
+        return bool(dt.fields) and all(_driver_orderable(f.dataType) for f in dt.fields)
+    return False
+
+
+def _py_keys(arr: pa.Array) -> list | None:
+    """Hashable, orderable Python values of a collected id column (a
+    struct becomes a tuple of its fields); None when any id is NULL at
+    any depth, which the driver path leaves to the Spark rounds."""
+    if arr.null_count:
+        return None
+    if pa.types.is_struct(arr.type):
+        cols = [_py_keys(c) for c in arr.flatten()]
+        if any(c is None for c in cols):
+            return None
+        return list(zip(*cols))
+    return arr.to_pylist()
+
+
+def _driver_cc(edges: DataFrame, src: str, dst: str) -> DataFrame | None:
+    """The driver path of :func:`cc_edge_list`: the labels of a graph of
+    at most ``LOCAL_CC_EDGES`` edges, or None when the graph is larger,
+    its id type does not order the same in Python, or an id is NULL."""
+    # the node type the Spark rounds would give (src/dst coerced as the
+    # symmetrizing union coerces them) — plan analysis, no job
+    node_t = (
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .schema["node"].dataType
+    )
+    if not _driver_orderable(node_t):
+        return None
+    # ONE job whatever the partition count: the limit runs per partition
+    # and then on one reducer (a limit collect() would scan partitions
+    # in growing take() waves, one job per wave)
+    pairs = (
+        edges.select(
+            F.col(src).cast(node_t).alias("a"), F.col(dst).cast(node_t).alias("b")
+        )
+        .limit(LOCAL_CC_EDGES + 1)
+        .toArrow()
+    )
+    m = pairs.num_rows
+    if m > LOCAL_CC_EDGES:
+        return None
+    nodes = pa.concat_arrays(
+        [pairs.column(0).combine_chunks(), pairs.column(1).combine_chunks()]
+    )
+    keys = _py_keys(nodes)
+    if keys is None:
+        return None
+    # union-find whose roots are always their set's min id: a union
+    # hangs the larger root under the smaller, compression keeps roots
+    first: dict = {}
+    for i, k in enumerate(keys):
+        first.setdefault(k, i)
+    parent = {k: k for k in first}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            nxt = parent[x]
+            parent[x] = root
+            x = nxt
+        return root
+
+    for i in range(m):
+        ra, rb = find(keys[i]), find(keys[m + i])
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # node and label columns are takes from the collected Arrow ids, so
+    # every value keeps its exact type; the frame is built on the JVM
+    # from Arrow batches (a list-built frame would be a Python RDD that
+    # every downstream job deserializes again)
+    table = pa.table({
+        "node": nodes.take(pa.array(list(first.values()), pa.int64())),
+        "comp": nodes.take(pa.array([first[find(k)] for k in first], pa.int64())),
+    })
+    schema = T.StructType([
+        T.StructField("node", node_t), T.StructField("comp", node_t)
+    ])
+    return edges.sparkSession.createDataFrame(table, schema)
 
 
 def cc_bounded_groups_array(

@@ -637,7 +637,10 @@ def _read_store_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     recover_store(path)
     if os.path.isdir(path):
         return spark.read.schema(ddl).parquet(path)
-    return spark.createDataFrame([], ddl)
+    # the false filter lets the optimizer see the frame as empty (an
+    # empty LocalRelation) and prune the joins against it; a list-built
+    # frame is an opaque Python RDD, joined by a job of its own
+    return spark.createDataFrame([], ddl).filter(F.lit(False))
 
 
 def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> None:
@@ -722,6 +725,40 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     near_pairs = near_pairs.localCheckpoint()
     exact = exact.localCheckpoint()
     decisions = assemble_decisions(batch, exact, near_pairs).unionByName(collapsed)
+    # --- the batch's dup edges, fixed BEFORE any store commit ---
+    # verified near pairs + exact matches vs the landed store + the
+    # in-batch exact collapses (batch CC on the union would see the
+    # identical-text edge, so the twin must too — the chain member ->
+    # in-batch rep -> landed match resolves transitively in the same
+    # mini-CC). A probe match of an incoming doc that already has a
+    # decision only arises on REPLAY: an earlier batch decided that doc
+    # and wrote its edges, and the first run never probed a batch
+    # against itself (the in-batch near pass is elided), so such
+    # matches — self-pairs and in-batch near pairs alike — are dropped
+    # and a replay re-derives exactly the first run's edges. A fresh
+    # doc in the same wave keeps its match to a re-sent landed one.
+    # The decided set must be read before this batch's decisions
+    # commit, so the pairs are checkpointed here, and the emptiness
+    # test below reads that leaf. No distinct: a pair found twice (near
+    # and exact) is harmless to the CC, and the edge store's write
+    # dedups its normalized pairs itself.
+    decided = _read_or_empty(decisions_dir, DECISIONS_DDL).select(
+        F.col("doc_id").alias("inc_id")
+    )
+    dup_pairs = (
+        near_pairs.unionByName(
+            exact.select(
+                F.col("doc_id").alias("inc_id"), F.col("exact_id").alias("ex_id")
+            )
+        )
+        .join(decided, "inc_id", "left_anti")
+        .unionByName(
+            collapsed.select(
+                F.col("doc_id").alias("inc_id"), F.col("matched_id").alias("ex_id")
+            )
+        )
+        .localCheckpoint()  # edge store + CC both read it
+    )
     # decisions FIRST, survivors second — and survivors re-read the
     # decisions STORE rather than the in-flight plan. Order matters:
     # the decisions plan lazily scans the index stores, and
@@ -744,34 +781,8 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         keep="existing",
     )
     # --- cluster maintenance (batch-sized + touched clusters only) ---
-    # edges: verified near pairs + exact matches vs the landed store
-    # + the in-batch exact collapses (batch CC on the union would see
-    # the identical-text edge, so the twin must too — the chain
-    # member -> in-batch rep -> landed match resolves transitively in
-    # the same mini-CC). A probe match whose landed side is one of the
-    # batch's OWN docs only arises on REPLAY (the batch is already in
-    # the index): the first run never probed the batch against itself
-    # (the in-batch near pass is elided), so such matches — self-pairs
-    # and in-batch near pairs alike — are dropped, and a replay
-    # re-derives exactly the first run's edges.
-    own = grouped.select(F.col("doc_id").alias("ex_id"))
-    dup_pairs = (
-        near_pairs.unionByName(
-            exact.select(
-                F.col("doc_id").alias("inc_id"), F.col("exact_id").alias("ex_id")
-            )
-        )
-        .join(own, "ex_id", "left_anti")
-        .unionByName(
-            collapsed.select(
-                F.col("doc_id").alias("inc_id"), F.col("matched_id").alias("ex_id")
-            )
-        )
-        .distinct()
-    )
     if dup_pairs.isEmpty():
         return
-    dup_pairs = dup_pairs.localCheckpoint()  # edge store + CC both read it
     # persist the VERIFIED edge list (normalized id pairs — tiny rows):
     # the recrawl refresh re-derives components of touched clusters from
     # these instead of guessing, so retiring a bridge doc SPLITS its

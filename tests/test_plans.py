@@ -986,24 +986,33 @@ def test_gopher_rules_is_pure_per_row_map(spark):
     assert "[codegen id" in plan
 
 
-def test_leakage_safe_split_moves_ids_only(spark):
+def test_leakage_safe_split_moves_ids_only(spark, monkeypatch):
     """The split op's 100 TB claim: on top of the certified cluster
-    plan (materialized as the checkpointed CC-label leaf), the
-    assignment itself touches document text NEVER — both final-plan
-    parquet scans are pruned to (doc_id, n_chars), and every hash
-    exchange is keyed on node/neighbor/group ids only."""
-    plan = plan_of(spark, "leakage_safe_split")
-    assert "CartesianProduct" not in plan
-    assert "ExistingRDD" in plan  # the checkpointed CC-label leaf
-    for read in re.findall(r"ReadSchema: (.+)", plan):
-        assert "text" not in read, read
-    keys = [
-        line for line in plan.splitlines() if "Arguments: hashpartitioning" in line
-    ]
-    assert keys
-    assert all(
-        ("node" in line) or ("nbr" in line) or ("group_id" in line) for line in keys
-    ), keys
+    plan (materialized as a CC-label leaf), the assignment itself
+    touches document text NEVER — both final-plan parquet scans are
+    pruned to (doc_id, n_chars), and every hash exchange is keyed on
+    node/neighbor/group ids only. Pinned on both cc_edge_list paths:
+    at this scale the labels are the driver path's Arrow-built
+    LocalTableScan; above the driver bound (forced here) they are the
+    Spark rounds' checkpointed ExistingRDD."""
+    from eurovision_spark.operators import imp_dedup
+
+    plans = {"LocalTableScan": plan_of(spark, "leakage_safe_split")}
+    monkeypatch.setattr(imp_dedup, "LOCAL_CC_EDGES", -1)
+    plans["ExistingRDD"] = plan_of(spark, "leakage_safe_split")
+    for label_leaf, plan in plans.items():
+        assert "CartesianProduct" not in plan
+        assert label_leaf in plan  # the materialized CC-label leaf
+        for read in re.findall(r"ReadSchema: (.+)", plan):
+            assert "text" not in read, read
+        keys = [
+            line for line in plan.splitlines() if "Arguments: hashpartitioning" in line
+        ]
+        assert keys
+        assert all(
+            ("node" in line) or ("nbr" in line) or ("group_id" in line)
+            for line in keys
+        ), keys
 
 
 def test_ccnet_approx_has_no_corpus_window_sort(spark):

@@ -877,6 +877,38 @@ def test_intake_replay_of_batch_with_in_batch_near_pair_changes_no_store(
     assert counts() == first
 
 
+
+def test_intake_wave_resending_a_landed_doc_keeps_a_fresh_near_copys_match(
+    spark, tmp_path
+):
+    """Document twin of the vector mixed-wave test: a wave that re-sends
+    landed doc 1 together with a fresh near copy 2 of it. Only the
+    re-sent doc's matches are dropped (it was decided earlier), so 2 is
+    decided near_dup of 1, and the edge and the shared cluster are
+    written, as if 1 had not been re-sent."""
+    import os
+
+    from eurovision_spark.streaming.ingest import intake_batch
+
+    store = str(tmp_path / "store")
+    x = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    far = "one two three four five six seven eight nine ten eleven twelve"
+    ddl = "doc_id bigint, text string"
+    intake_batch(spark, store, spark.createDataFrame([(1, x), (3, far)], ddl))
+    intake_batch(
+        spark, store, spark.createDataFrame([(1, x), (2, x + " perturbed")], ddl)
+    )
+
+    def rows(name):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(store, name)).collect()
+        )
+
+    assert rows("decisions") == [(1, "new", None), (2, "near_dup", 1), (3, "new", None)]
+    assert [r[0] for r in rows("landed")] == [1, 3]
+    assert rows("edges") == [(1, 2)]
+    assert rows("clusters") == [(1, 1), (2, 1)]
+
 def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
     """Vector twin of the cluster store: three waves of rescaled copies
     (cosine 1.0, scale-invariant sign buckets) build one transitive
