@@ -146,7 +146,8 @@ def cc_edge_list(
     max_iter (pinned in tests/test_pipeline_ops.py). That holds when ids
     run monotone along a chain; with ids shuffled along it the jump
     buys little (measured: a 100-node path needs 31-60 rounds, a
-    200-node path does not converge in 15).
+    200-node path does not converge in 15; pinned as a known defect by
+    an xfail test in tests/test_pipeline_ops.py).
 
     Every round shuffles ids only, never payloads — the formulation
     that survives a 100 TB corpus — and the label frame is

@@ -591,7 +591,10 @@ def stream_incremental_dedup(
        docs get their labels. Labels are min member ids, so three
        micro-batches building a transitive cluster converge to exactly
        the batch minhash_cluster labels on the union (pinned in
-       tests/test_streaming.py).
+       tests/test_streaming.py). The edges are fixed before the first
+       store commit, so a batch cut between two of its commits and
+       replayed whole leaves every store as an uncut run would (pinned
+       there too).
 
     Arrival-order semantics, stated honestly: a near-dup pair split
     across batches keeps the EARLIER-ARRIVED member (the batch twin
@@ -641,6 +644,33 @@ def _read_store_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     # empty LocalRelation) and prune the joins against it; a list-built
     # frame is an opaque Python RDD, joined by a job of its own
     return spark.createDataFrame([], ddl).filter(F.lit(False))
+
+
+def _drop_replayed_matches(
+    pairs: DataFrame, inc: str, ex: str, decided: DataFrame, own: DataFrame
+) -> DataFrame:
+    """Drop the probe matches that only a REPLAY of a batch can find: the
+    incoming id ``inc`` already has a decision (its id is in the one-
+    column ``decided``) AND the landed id ``ex`` is one of the batch's
+    own ids (in the one-column ``own``). The first run never probed a
+    batch against itself (the in-batch near pass is elided), so such a
+    match is a self-pair or an in-batch near pair the first run did not
+    link. Every other match is kept: a match to a doc landed by an
+    earlier batch is re-derived identically on a replay (rewriting it is
+    idempotent, which re-writes the edges and clusters of a batch cut
+    after its decisions commit), and a fresh doc's match to a re-sent
+    landed doc is the real dup it is."""
+    decided_flag = decided.select(
+        F.col(decided.columns[0]).alias(inc), F.lit(True).alias("_decided")
+    )
+    own_flag = own.select(F.col(own.columns[0]).alias(ex), F.lit(True).alias("_own"))
+    replayed = F.coalesce("_decided", F.lit(False)) & F.coalesce("_own", F.lit(False))
+    return (
+        pairs.join(decided_flag, inc, "left")
+        .join(own_flag, ex, "left")
+        .filter(~replayed)
+        .select(*pairs.columns)
+    )
 
 
 def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> None:
@@ -730,28 +760,28 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     # in-batch exact collapses (batch CC on the union would see the
     # identical-text edge, so the twin must too — the chain member ->
     # in-batch rep -> landed match resolves transitively in the same
-    # mini-CC). A probe match of an incoming doc that already has a
-    # decision only arises on REPLAY: an earlier batch decided that doc
-    # and wrote its edges, and the first run never probed a batch
-    # against itself (the in-batch near pass is elided), so such
-    # matches — self-pairs and in-batch near pairs alike — are dropped
-    # and a replay re-derives exactly the first run's edges. A fresh
-    # doc in the same wave keeps its match to a re-sent landed one.
-    # The decided set must be read before this batch's decisions
+    # mini-CC). A replay's extra probe matches (an already-decided
+    # incoming doc against one of the batch's own landed docs) are
+    # dropped, so a replay re-derives exactly the first run's edges,
+    # also when the first run was cut after its decisions commit; a
+    # fresh doc in the same wave keeps its match to a re-sent landed
+    # one. The decided set must be read before this batch's decisions
     # commit, so the pairs are checkpointed here, and the emptiness
     # test below reads that leaf. No distinct: a pair found twice (near
     # and exact) is harmless to the CC, and the edge store's write
     # dedups its normalized pairs itself.
-    decided = _read_or_empty(decisions_dir, DECISIONS_DDL).select(
-        F.col("doc_id").alias("inc_id")
-    )
     dup_pairs = (
-        near_pairs.unionByName(
-            exact.select(
-                F.col("doc_id").alias("inc_id"), F.col("exact_id").alias("ex_id")
-            )
+        _drop_replayed_matches(
+            near_pairs.unionByName(
+                exact.select(
+                    F.col("doc_id").alias("inc_id"), F.col("exact_id").alias("ex_id")
+                )
+            ),
+            "inc_id",
+            "ex_id",
+            decided=_read_or_empty(decisions_dir, DECISIONS_DDL).select("doc_id"),
+            own=grouped.select("doc_id"),
         )
-        .join(decided, "inc_id", "left_anti")
         .unionByName(
             collapsed.select(
                 F.col("doc_id").alias("inc_id"), F.col("matched_id").alias("ex_id")
@@ -1211,18 +1241,22 @@ def stream_vector_dedup(
         cos = dot(F.col("v"), F.col("ev")) / (F.col("nv") * F.col("en"))
         # materialized BEFORE any store write (the plan reads landed_dir
         # and decisions_dir; a rewrite would invalidate its file
-        # listing). An incoming vector that already has a decision was
-        # decided by an earlier batch, so a replay of it adds no edges:
-        # its matches (self-pairs and, when its batch held its own near
-        # pair, the pair partner) are dropped, while a fresh vector in
-        # the same batch keeps its match to a re-sent landed one
-        decided = _read_store_or_empty(
-            spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
-        ).select("vec_id")
+        # listing). A replay's extra matches (an already-decided
+        # incoming vector against one of the wave's own landed vectors)
+        # are dropped, as in intake_batch; a fresh vector in the same
+        # wave keeps its match to a re-sent landed one
         near_pairs = (
-            cand.filter(cos >= NEAR_DUP_THRESHOLD)
-            .join(decided, "vec_id", "left_anti")
-            .select("vec_id", "ex_id")
+            _drop_replayed_matches(
+                cand.filter(cos >= NEAR_DUP_THRESHOLD).select("vec_id", "ex_id"),
+                "vec_id",
+                "ex_id",
+                decided=_read_store_or_empty(
+                    spark,
+                    decisions_dir,
+                    "vec_id bigint, decision string, matched_id bigint",
+                ).select("vec_id"),
+                own=batch.select("vec_id"),
+            )
             .localCheckpoint()
         )
         near = near_pairs.groupBy("vec_id").agg(F.min("ex_id").alias("matched_id"))

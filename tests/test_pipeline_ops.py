@@ -880,7 +880,6 @@ def test_connected_components_any_key_star_reduction(spark, cc_path):
     assert got[("A", 999)] == 999
 
 
-
 def _random_forest(rng, ids):
     """Edge list of a seeded random forest over ``ids`` (a shuffled id
     pool): stars, a chain of 200+ hops, cliques, isolated edges and a
@@ -897,6 +896,7 @@ def _random_forest(rng, ids):
     # the chain's ids run monotone along it, in either direction: the
     # Spark rounds' pointer doubling converges in O(log diameter) rounds
     # on such a chain, but not on one whose ids are shuffled along it
+    # (a known defect, pinned by the xfail test below)
     chain = sorted(next(take) for _ in range(rng.randint(201, 260)))
     if rng.random() < 0.5:
         chain.reverse()
@@ -953,6 +953,31 @@ def test_cc_edge_list_driver_labels_equal_spark_rounds(spark, monkeypatch):
     assert served == [None]
 
 
+@pytest.mark.xfail(
+    strict=True,
+    raises=RuntimeError,
+    reason="known defect (ROADMAP carry-over: the Spark CC rounds are "
+    "O(diameter) on chains whose ids are not monotone along them)",
+)
+def test_cc_edge_list_spark_rounds_converge_on_a_chain_of_shuffled_ids(
+    spark, monkeypatch
+):
+    """The Spark rounds' pointer doubling promises O(log diameter)
+    rounds, but on a 200-node path whose ids are shuffled along it the
+    jump buys little and the default max_iter raises. Pins the defect:
+    this test turns green when the jump is fixed."""
+    import random
+
+    from eurovision_spark.operators.imp_dedup import cc_edge_list
+
+    _cc_spark_rounds(monkeypatch)
+    ids = list(range(200))
+    random.Random(7).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "s bigint, d bigint")
+    got = {r.node: r.comp for r in cc_edge_list(edges, "s", "d").collect()}
+    assert got == {i: 0 for i in range(200)}
+
+
 def test_cc_edge_list_small_graph_launches_at_most_two_jobs(spark):
     """A 10-edge graph handed over as a plan (not a materialized leaf),
     the shape of one intake batch: the driver path persists it, reads
@@ -974,6 +999,7 @@ def test_cc_edge_list_small_graph_launches_at_most_two_jobs(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
     got = {r.node: r.comp for r in labels.collect()}
     assert got[3383] == 17 and got[2377] == 1827 and got[7] == 5 and len(got) == 17
+
 
 def test_substring_dedup_flags_exactly_the_planted_span(spark):
     """The chimera shares EXACTLY its 16-token lifted span with the

@@ -877,7 +877,6 @@ def test_intake_replay_of_batch_with_in_batch_near_pair_changes_no_store(
     assert counts() == first
 
 
-
 def test_intake_wave_resending_a_landed_doc_keeps_a_fresh_near_copys_match(
     spark, tmp_path
 ):
@@ -908,6 +907,69 @@ def test_intake_wave_resending_a_landed_doc_keeps_a_fresh_near_copys_match(
     assert [r[0] for r in rows("landed")] == [1, 3]
     assert rows("edges") == [(1, 2)]
     assert rows("clusters") == [(1, 1), (2, 1)]
+
+
+def _cut_once_at(monkeypatch, store_name: str) -> None:
+    """Make the next ``sinks.upsert_parquet`` commit into a store named
+    ``store_name`` raise before it writes anything (a run cut between two
+    store commits); later calls run normally."""
+    import os
+
+    from eurovision_spark import sinks
+
+    real = sinks.upsert_parquet
+
+    def cut(df, path, *args, **kwargs):
+        if os.path.basename(path) == store_name:
+            monkeypatch.setattr(sinks, "upsert_parquet", real)
+            raise RuntimeError(f"cut before the {store_name} commit")
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "upsert_parquet", cut)
+
+
+@pytest.mark.parametrize("cut_at", ["landed", "edges", "clusters"])
+def test_intake_batch_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
+    spark, tmp_path, monkeypatch, cut_at
+):
+    """At-least-once recovery: a batch whose run dies after its decisions
+    commit is re-run whole. Every doc of it then has a decision, but its
+    matches to docs landed by the earlier batch must still be written:
+    all six stores must equal those of a run that was never cut."""
+    import os
+
+    from eurovision_spark.streaming.ingest import intake_batch
+
+    x = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    far = "one two three four five six seven eight nine ten eleven twelve"
+    ddl = "doc_id bigint, text string"
+    waves = [
+        [(1, x), (3, far)],
+        # near copies of both landed docs, one of them sent twice
+        [(2, x + " perturbed"), (4, far + " perturbed"), (5, x + " perturbed")],
+    ]
+    stores = ("landed", "index", "sigindex", "decisions", "clusters", "edges")
+
+    def run(store: str, cut: bool) -> dict[str, list]:
+        for i, wave in enumerate(waves):
+            batch = spark.createDataFrame(wave, ddl)
+            if cut and i == 1:
+                _cut_once_at(monkeypatch, cut_at)
+                with pytest.raises(RuntimeError, match="cut before"):
+                    intake_batch(spark, store, batch)
+            intake_batch(spark, store, batch)
+        return {
+            name: sorted(
+                tuple(r) for r in spark.read.parquet(os.path.join(store, name)).collect()
+            )
+            for name in stores
+        }
+
+    clean = run(str(tmp_path / "clean"), cut=False)
+    assert clean["edges"] == [(1, 2), (2, 5), (3, 4)]
+    assert clean["clusters"] == [(1, 1), (2, 1), (3, 3), (4, 3), (5, 1)]
+    assert run(str(tmp_path / "cut"), cut=True) == clean
+
 
 def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
     """Vector twin of the cluster store: three waves of rescaled copies
@@ -1043,6 +1105,63 @@ def test_vector_wave_resending_a_landed_vector_keeps_a_fresh_near_copys_match(
     assert rows("decisions") == [(1, "new", None), (2, "near_dup", 1), (3, "new", None)]
     assert [r[0] for r in rows("landed")] == [1, 3]
     assert rows("clusters") == [(1, 1), (2, 1)]
+
+
+@pytest.mark.parametrize("cut_at", ["landed", "clusters"])
+def test_vector_wave_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
+    spark, tmp_path, monkeypatch, cut_at
+):
+    """Vector twin of the intake recovery test: a wave whose run dies
+    after its decisions commit fails the query; a restart from the same
+    checkpoint re-runs the wave, and its matches to vectors landed by the
+    earlier wave must still be written, so every store equals that of a
+    run that was never cut."""
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+
+    from eurovision_spark.streaming.ingest import stream_vector_dedup
+
+    va = [float(i % 7 - 3) + 0.25 for i in range(64)]
+    vb = [float((i * 3) % 11 - 5) - 0.5 for i in range(64)]
+    waves = [
+        [(1, va), (3, vb)],
+        [(2, [x * 2.0 for x in va]), (4, [x * 3.0 for x in vb])],
+    ]
+    stores = ("landed", "decisions", "clusters")
+
+    def run(tag: str, cut: bool) -> dict[str, list]:
+        vecs_dir = tmp_path / tag / "vecs_in"
+        vecs_dir.mkdir(parents=True)
+        store = tmp_path / tag / "store"
+        ck = str(tmp_path / tag / "ck")
+        for i, wave in enumerate(waves):
+            out = tmp_path / tag / f"w{i}"
+            spark.createDataFrame(
+                wave, "vec_id bigint, embedding array<double>"
+            ).coalesce(1).write.parquet(str(out))
+            shutil.copy(next(out.glob("part-*.parquet")), vecs_dir / f"w{i}.parquet")
+            if cut and i == 1:
+                _cut_once_at(monkeypatch, cut_at)
+                q = stream_vector_dedup(spark, str(vecs_dir), str(store), ck)
+                try:
+                    with pytest.raises(StreamingQueryException, match="cut before"):
+                        q.processAllAvailable()
+                finally:
+                    q.stop()
+            q = stream_vector_dedup(spark, str(vecs_dir), str(store), ck)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        return {
+            name: sorted(tuple(r) for r in spark.read.parquet(str(store / name)).collect())
+            for name in stores
+        }
+
+    clean = run("clean", cut=False)
+    assert clean["clusters"] == [(1, 1), (2, 1), (3, 3), (4, 3)]
+    assert run("cut", cut=True) == clean
 
 
 def test_stream_quality_gate_equals_batch_classifier(spark, sf_dir, tmp_path):
