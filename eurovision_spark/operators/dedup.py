@@ -46,7 +46,12 @@ N_BANDS = 4  # 4 bands x 4 rows
 
 
 def shingles(toks: Column) -> Column:
-    """Word 3-gram shingles (1-indexed element_at to mirror DuckDB lists)."""
+    """Word 3-gram shingles (1-indexed element_at to mirror DuckDB lists).
+
+    ``toks`` is referenced 3x per element, and codegen re-evaluates an
+    inline split() at every reference — O(tokens) regex splits per doc
+    instead of one (measured 4x slower at sf0.1). Pass a materialized
+    token column (a projection boundary), never an inline expression."""
     return F.when(
         F.size(toks) >= 3,
         F.transform(
@@ -165,7 +170,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    # two-step projection: split once, then shingle (see _minhash_signatures)
+    # two-step projection: split once, then shingle (see shingles)
     t = d.select("doc_id", tokens(F.lower(F.col("text"))).alias("_toks")).select(
         "doc_id", F.array_distinct(shingles(F.col("_toks"))).alias("sh")
     )
@@ -190,50 +195,6 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + LSH banded candidate generation
 # ---------------------------------------------------------------------------
-
-
-def _minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, minhashes: array<bigint>[N_PERM]) — per-row, shuffle-FREE.
-
-    Permutation i hashes h -> ((2i+1)*h + 17i+1) mod (2^31-1); the base
-    shingle hash is the cross-engine md5-derived 60-bit int mod p,
-    computed ONCE per shingle. Each permutation is then an ``array_min``
-    over a JVM higher-order ``transform`` — no explode, no distinct
-    (min over a multiset equals min over its set), no per-permutation
-    row blowup. The only shuffle in the whole LSH pipeline is the final
-    band bucket grouping, which is why this survives 100 TB: per-row
-    signature cost is O(shingles x perms) inside whole-stage codegen,
-    and shuffled bytes are 4 x (16-byte band_sig + doc_id) per doc.
-    """
-    # Spread the compute: the source may arrive in few coarse splits (one
-    # row group locally; unsplittable files on a cluster) while signature
-    # cost is per-row heavy. A round-robin repartition of the narrow
-    # (doc_id, text) projection is one cheap shuffle that unlocks full
-    # parallelism for the md5-per-shingle stage.
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    # Materialize the token array as a real column BEFORE shingling:
-    # shingles() references its argument 3x per element, and codegen
-    # re-evaluates an inline split() expression at every reference —
-    # O(tokens) regex splits per doc instead of one (measured 4x slower
-    # at sf0.1). A projection boundary makes the split happen once.
-    toked = docs.select(
-        "doc_id", tokens(F.lower(F.col("text"))).alias("_toks")
-    ).filter(F.size("_toks") >= 3)
-    h_arr = F.transform(shingles(F.col("_toks")), lambda s: md5_long(s) % P31)
-    # ONE fold over the shingle hashes maintains all 16 running minima:
-    # acc[i] = min_h ((2i+1)*h + 17i+1) mod p, with i the accumulator
-    # index supplied by the two-arg transform lambda. Referencing h_arr
-    # exactly once matters: naming it in 16 separate array_min
-    # expressions lets projection collapse duplicate the md5 transform
-    # 16x (measured ~3x slower at sf0.1).
-    sigs = F.aggregate(
-        h_arr,
-        F.array_repeat(F.lit(P31).cast("bigint"), N_PERM),
-        lambda acc, h: F.transform(
-            acc, lambda m, i: F.least(m, ((2 * i + 1) * h + (17 * i + 1)) % P31)
-        ),
-    )
-    return toked.select("doc_id", sigs.alias("minhashes"))
 
 
 MINHASH_SIG_SQL = f"""
@@ -404,12 +365,12 @@ SURVIVOR_RANK_SQL = """,
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE per-row pass (r10): diversity and the band-0 signature are
     # both per-row values of the same token array — the old form
-    # tokenized the corpus twice (once for diversity, once inside
-    # _minhash_signatures) and then JOINED the two frames back on
-    # doc_id to reassemble values that never left the row. Also: only
-    # band 0's rows_per_band permutations are consumed here, so the
-    # fold maintains 4 running minima instead of _minhash_signatures'
-    # 16 (4x less per-shingle arithmetic, identical values — the
+    # tokenized the corpus twice (once for diversity, once for the
+    # signatures) and then JOINED the two frames back on doc_id to
+    # reassemble values that never left the row. Also: only band 0's
+    # rows_per_band permutations are consumed here, so the fold
+    # maintains 4 running minima instead of minhash_from_shingles' 16
+    # (4x less per-shingle arithmetic, identical values — the
     # permutation formulas are independent).
     docs = docs_with_copies(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
@@ -487,7 +448,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SimHash: per-bit majority vote over token hashes -> 16-bit document "
     "signature; near-dups share signatures (hamming-ball lookups become "
     "equi-joins on signature rotations). Pure per-row fold over the "
-    "hashed-token array (the _minhash_signatures shape) — ZERO shuffles, "
+    "hashed-token array (the minhash_from_shingles shape) — ZERO shuffles, "
     "so the scan is linear at any corpus size; the oracle states the "
     "same votes relationally.",
 )
@@ -496,7 +457,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the hashed-token array behind a projection boundary:
     # the 16 per-bit folds below each reference it, and an inline md5
     # transform would be re-evaluated once PER BIT by projection
-    # collapse (the _minhash_signatures lesson)
+    # collapse (the minhash_from_shingles lesson)
     hashed = d.select(
         "doc_id",
         F.transform(
@@ -902,7 +863,7 @@ def minhash_from_hashes(hs: Column) -> Column:
     shingle-set frame below), never an inline expression: each of the
     16 array_min terms references it once, so an embedded md5
     transform would be re-evaluated 16x (the reason
-    :func:`_minhash_signatures` uses the single-fold form instead).
+    :func:`minhash_from_shingles` uses the single-fold form instead).
     Over a stored column the 16 passes are pure long arithmetic and
     beat the fold's per-element 16-array allocation ~1.3x (measured
     0.92s vs 1.28s at sf0.1, bit-identical output)."""
@@ -914,11 +875,21 @@ def minhash_from_hashes(hs: Column) -> Column:
 
 
 def minhash_from_shingles(sh: Column) -> Column:
-    """array<string> shingles -> array<bigint>[N_PERM] minhash signature
-    — the same values as :func:`_minhash_signatures` (min over a set
-    equals min over the multiset, so distinct shingle arrays produce
-    identical signatures). Single-fold form: the md5 hashing is inline
-    here, so the 16-array-min form would re-hash every shingle 16x."""
+    """array<string> shingles -> array<bigint>[N_PERM] minhash signature,
+    per-row and shuffle-FREE: the engine's one MinHash fold.
+
+    Permutation i hashes h -> ((2i+1)*h + 17i+1) mod (2^31-1); the base
+    shingle hash is the cross-engine md5-derived 60-bit int mod p,
+    computed ONCE per shingle. ONE fold over the shingle hashes
+    maintains all 16 running minima (acc[i], i the accumulator index of
+    the two-arg transform lambda) — no explode, no per-permutation row
+    blowup, and min over a set equals min over the multiset, so
+    distinct or repeated shingle arrays give identical signatures.
+    Single-fold form because the md5 hashing is inline here: naming it
+    in 16 separate array_min terms lets projection collapse duplicate
+    the md5 transform 16x (measured ~3x slower at sf0.1;
+    :func:`minhash_from_hashes` is the 16-pass form over stored
+    hashes)."""
     h_arr = F.transform(sh, lambda s: md5_long(s) % P31)
     return F.aggregate(
         h_arr,
@@ -1481,10 +1452,10 @@ def index_signatures(idx: DataFrame) -> DataFrame:
     """(doc_id, minhashes) derived from a :func:`doc_index` frame's
     DISTINCT shingle sets instead of a second tokenize+shingle pass
     over the text (r10, guide §2.4): min over a set equals min over
-    the multiset, so the signatures are bit-identical to
-    :func:`_minhash_signatures` over the same documents. The size >= 1
-    filter is exactly its ``size(_toks) >= 3`` gate (a doc has >= 1
-    word-3-gram iff it has >= 3 tokens) — without it, every
+    the multiset, so the signatures equal a fold over each document's
+    full shingle list. The size >= 1 filter is exactly a
+    ``size(tokens) >= 3`` gate (a doc has >= 1 word-3-gram iff it has
+    >= 3 tokens) — without it, every
     shingle-less doc would share the degenerate all-P31 signature and
     band into one mega-bucket."""
     return idx.filter(F.size("sh") >= 1).select(
@@ -1581,8 +1552,8 @@ def incremental_dedup_decisions(inc: DataFrame, ex: DataFrame) -> DataFrame:
     # — the shape a landed store persists — checkpoints once, and the
     # band signatures derive from its distinct shingle sets
     # (index_signatures) instead of re-tokenizing the text. The old
-    # form ran tokenize+shingle TWICE per side (doc_index AND
-    # _minhash_signatures).
+    # form ran tokenize+shingle TWICE per side (doc_index AND the
+    # signature fold).
     inc_idx = doc_index(inc).localCheckpoint(eager=False)
     ex_idx = doc_index(ex).localCheckpoint(eager=False)
     exact, near_pairs = incremental_probe(
@@ -1866,13 +1837,10 @@ def dedup_decision_frames(
     driver=False,  # registry-gated: oracle-checked at sf0.001 (pytest) + sf0.01/0.1 (verify)
 )
 def near_dup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = docs_with_copies(spark, sf_dir)
-    pairs = _lsh_candidate_pairs(_minhash_signatures(docs))
-    sets = (
-        docs.repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", tokens(F.lower(F.col("text"))).alias("_toks"))
-        .select("doc_id", F.array_distinct(shingles(F.col("_toks"))).alias("sh"))
-    )
+    # one tokenize pass: the candidates' signatures fold the same
+    # distinct shingle sets the verify joins read
+    sets = doc_index(docs_with_copies(spark, sf_dir)).select("doc_id", "sh")
+    pairs = _lsh_candidate_pairs(index_signatures(sets))
     s1 = sets.select(F.col("doc_id").alias("doc_id_1"), F.col("sh").alias("sh1"))
     s2 = sets.select(F.col("doc_id").alias("doc_id_2"), F.col("sh").alias("sh2"))
     union_size = F.size(F.array_distinct(F.concat("sh1", "sh2")))

@@ -193,9 +193,11 @@ def upsert_parquet(
     ``keep="existing"``: first writer wins per key; only rows whose key
     is absent are appended (the reference's swallowed duplicate-PK
     INSERT, scan.py:129-132, made explicit). ``keep="updates"``:
-    last writer wins; incoming rows replace same-key rows. Keys must be
-    unique within ``df`` (pre-aggregate upstream; this op does not pick
-    among duplicate incoming rows).
+    last writer wins; incoming rows replace same-key rows. For
+    ``"updates"`` keys must be unique within ``df`` (pre-aggregate
+    upstream; this op does not pick among duplicate incoming rows); for
+    ``"existing"`` the rows of ``df`` that share a key land or drop
+    together (the intake gates append a whole histogram per batch key).
 
     Mechanics: ``keep="existing"`` reads only the key columns of the
     store, with their types taken from ``df`` (no schema-inference job),

@@ -24,8 +24,13 @@ Both run to completion on local parquet/text dirs via
 
 from __future__ import annotations
 
+import hashlib
+import os
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from eurovision_spark.operators.parse import number_lines, parse_registry_lines
@@ -41,8 +46,6 @@ def _latest_tail(tails_root: str, before: int | None = None) -> str | None:
     """Path of the newest carried-tail file (optionally with epoch <
     ``before`` — replay-stable: re-running epoch N reads the same
     predecessor tail it read the first time)."""
-    import os
-
     if not os.path.isdir(tails_root):
         return None
     epochs = sorted(
@@ -93,8 +96,6 @@ def stream_registry_ingest(
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        import os
-
         caches: list = []
         try:
             tails_root = os.path.join(out_dir, "_tails")
@@ -155,7 +156,6 @@ def flush_registry_tail(spark: SparkSession, out_dir: str) -> None:
     complete (a record still awaiting continuation lines would be
     finalized from half its lines — exactly what the in-stream tail
     carry exists to prevent)."""
-    import os
     import shutil
 
     tails_root = os.path.join(out_dir, "_tails")
@@ -607,13 +607,7 @@ def stream_incremental_dedup(
     At 100 TB the stores are partitioned tables keyed like their probes
     (digest / band signature / cluster id).
     """
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         intake_batch(spark, store_dir, batch_df)
@@ -629,12 +623,12 @@ DECISIONS_DDL = "doc_id bigint, decision string, matched_id bigint"
 CLUSTERS_DDL = "doc_id bigint, cluster_id bigint"
 
 
-def _read_store_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+def _read_store_or_empty(
+    spark: SparkSession, path: str, ddl: "str | T.StructType"
+) -> DataFrame:
     """A keyed store (sinks.commit_store layout) read with the schema its
     caller already knows — no schema-inference job — after recovering
     any interrupted commit; an absent store reads as empty."""
-    import os
-
     from eurovision_spark.sinks import recover_store
 
     recover_store(path)
@@ -682,8 +676,6 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
     the landed store by probing its persisted digest + signature
     indexes, land survivors, maintain the cluster store. Semantics and
     replay guarantees documented on stream_incremental_dedup."""
-    import os
-
     from eurovision_spark.operators.dedup import (
         assemble_decisions,
         banded_signatures,
@@ -894,8 +886,6 @@ def assign_splits_batch(
     touched-clusters-sized (semi-joins against the batch's cluster
     labels); the stores are keyed parquet like the rest of the intake
     tier."""
-    import os
-
     from eurovision_spark.operators.pipeline import SPLIT_SEED
     from eurovision_spark.operators.textstats import md5_long
     from eurovision_spark.sinks import delete_keys, upsert_parquet
@@ -1002,13 +992,7 @@ def stream_split_assign(
     the straddle lands in ``split_conflicts/``). The batch twin is
     ``leakage_safe_split``; parity under min-member-first arrival and
     replay stability are pinned in tests/test_streaming.py."""
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         intake_batch(spark, store_dir, batch_df)
@@ -1076,8 +1060,6 @@ def refresh_corpus(
 
     Returns the materialized delta frame (doc_id, status, old_digest,
     new_digest)."""
-    import os
-
     from eurovision_spark.operators.pipeline import digest_delta
     from eurovision_spark.sinks import commit_store, delete_keys
 
@@ -1197,8 +1179,6 @@ def stream_vector_dedup(
     clusters, and stored members relabel when a smaller id arrives
     later — labels are min member ids, transitive across micro-batches
     (pinned in tests/test_streaming.py)."""
-    import os
-
     from eurovision_spark.operators.similarity import (
         N_PLANES,
         NEAR_DUP_THRESHOLD,
@@ -1378,8 +1358,6 @@ def stream_span_dedup(
     (localCheckpoint) BEFORE either store write, so the lazily-planned
     store probe can't re-read files the same batch rewrites; first-wins
     keyed upserts make a replayed micro-batch a no-op on both stores."""
-    import os
-
     from eurovision_spark.operators.dedup import (
         apply_block_removals,
         block_removals,
@@ -1479,6 +1457,104 @@ def drift_batch_key(batch_df: DataFrame) -> tuple[int, str]:
     )
 
 
+def _keyed_gate(
+    spark: SparkSession,
+    stream: DataFrame,
+    checkpoint_dir: str,
+    hist_dir: str,
+    ledger_dir: str,
+    tag: str,
+    histogram: Callable[[DataFrame], DataFrame],
+    statistic: Callable[[DataFrame, DataFrame | None], tuple],
+    ledger_ddl: str,
+) -> StreamingQuery:
+    """The skeleton of every histogram intake gate. Per micro-batch of
+    ``stream`` (which carries a ``doc_id`` identity column),
+    ``histogram(batch)`` folds the arriving rows into a bounded
+    histogram ``counts``, ``statistic(counts, base)`` scores it against
+    the landed baseline, one ledger row records the result, and the
+    histogram folds into the baseline.
+
+    The replay contract, kept here once for every gate:
+
+    - the batch key is :func:`drift_batch_key` over ``doc_id`` plus the
+      gate's config ``tag`` (a digest of the watched column, grid or
+      model): replay-stable, and scoped to the config, so several
+      configs can share one store directory without mixing;
+    - the baseline is every OTHER key's stored histogram under the same
+      tag. Exclusion is by key, so an at-least-once replay never sees
+      itself and recomputes the identical statistic. ``statistic`` gets
+      those rows unsummed (the histogram's columns, no ``batch_key``),
+      or None when there are none: the first batch of a config has
+      nothing to drift from;
+    - the ledger row (``ledger_ddl``: ``batch_key``, the batch's row
+      count, then the values ``statistic`` returns) is written before
+      the histogram, and both stores are first-wins upserts keyed on
+      ``batch_key`` alone. A batch cut between the two commits replays
+      to the same ledger row and then lands its histogram; a replay
+      after both changes neither store; and a wave that re-sends landed
+      ids with recrawled content (the same key) cannot fold its cells
+      under the landed key's ledger row;
+    - the histogram store's schema is ``batch_key`` plus
+      ``counts.schema``, so the baseline read needs no DDL of its own
+      and no schema-inference job.
+
+    Per batch the only batch-sized work is the key and the histogram
+    (bounded rows out); the baseline is batches x cells rows at any
+    corpus scale and never touches raw rows."""
+    from eurovision_spark.sinks import upsert_parquet
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        n, batch_key = drift_batch_key(batch_df.select("doc_id"))
+        if not n:
+            return
+        batch_key += tag
+        counts = histogram(batch_df).localCheckpoint()
+        stored = T.StructType(
+            [T.StructField("batch_key", T.StringType()), *counts.schema.fields]
+        )
+        base = (
+            _read_store_or_empty(spark, hist_dir, stored)
+            .filter((F.col("batch_key") != batch_key) & F.col("batch_key").endswith(tag))
+            .drop("batch_key")
+        )
+        values = statistic(counts, None if base.isEmpty() else base)
+        ledger_row = spark.createDataFrame([(batch_key, n, *values)], ledger_ddl)
+        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
+        upsert_parquet(
+            counts.select(F.lit(batch_key).alias("batch_key"), "*"),
+            hist_dir,
+            ["batch_key"],
+            keep="existing",
+        )
+
+    return (
+        stream.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _config_tag(kind: str, config: str) -> str:
+    """A gate's config tag: ``-<kind>`` and 8 hex digits of the config's
+    md5 (the suffix :func:`_keyed_gate` scopes keys and baselines by)."""
+    return f"-{kind}{hashlib.md5(config.encode()).hexdigest()[:8]}"
+
+
+def _grid_bin(v: Column, width: float) -> Column:
+    """The fixed-width bin of ``v``, clamped to [0, KS_NBINS)."""
+    from eurovision_spark.operators.textstats import KS_NBINS
+
+    return F.least(
+        F.greatest(F.floor(v / F.lit(width)), F.lit(0)), F.lit(KS_NBINS - 1)
+    ).cast("bigint")
+
+
+def _count_by(batch: DataFrame, *cells: "str | Column") -> DataFrame:
+    """The (cells, n double) count histogram of ``batch``."""
+    return batch.groupBy(*cells).agg(F.count("*").cast("double").alias("n"))
+
+
 def stream_drift_gate(
     spark: SparkSession,
     docs_dir: str,
@@ -1500,130 +1576,65 @@ def stream_drift_gate(
     (truncated pages, boilerplate floods, wrong parser) from silently
     polluting a 100 TB mixture.
 
-    Stores (keyed parquet):
+    Stores (keyed parquet, replay contract: :func:`_keyed_gate`):
 
     - ``hist_batches/`` (batch_key, bin, n) — each batch's fixed-grid
-      length histogram, keyed by a DETERMINISTIC batch digest
-      (``drift_batch_key``: row count + bit_xor of xxhash64(doc_id),
-      a full 64-bit order-independent, replay-stable content key);
+      histogram (<= 64 rows), keyed by the deterministic
+      ``drift_batch_key`` plus the grid tag;
     - ``drift_ledger/`` (batch_key, n_docs, ks_vs_baseline, alert) —
       one decision row per distinct batch.
 
-    Per batch: histogram the batch (the ONLY batch-sized work — one
-    partial/final (bin) count, <= 64 rows out), compute KS against the
-    baseline = sum of all OTHER batches' stored histograms (bounded:
-    batches x 64 rows), append the ledger row, fold the histogram in.
-    Baseline exclusion is BY KEY, so an at-least-once replay recomputes
-    the identical statistic and both first-wins upserts no-op — the
-    ledger never duplicates and the baseline never double-counts. The
-    first batch has no baseline: ks is null, alert 0 (nothing to drift
-    from). At corpus scale the histogram store stays tiny (64 rows per
-    ingested batch) and the KS arithmetic never touches document
-    rows."""
-    import os
-
+    The first batch of a grid has no baseline: ks is null, alert 0."""
     from eurovision_spark.operators.textstats import KS_NBINS, KS_W
-    from eurovision_spark.sinks import upsert_parquet
 
-    hist_dir = os.path.join(store_dir, "hist_batches")
-    ledger_dir = os.path.join(store_dir, "drift_ledger")
     val = F.col(value) if isinstance(value, str) else value
     w = float(width) if width is not None else KS_W
     # r08 review finding: the binned VALUE and WIDTH define the grid's
     # semantics — histograms from different (value, width) configs must
     # never merge into one baseline, and a config change must not let a
-    # replay freeze a stale ledger row. The grid tag rides in the batch
-    # key (so ledger + histogram keys are config-scoped) and the
-    # baseline filters to ITS grid only, so one store_dir can safely
-    # carry several watched marginals side by side.
-    import hashlib
+    # replay freeze a stale ledger row. The grid tag scopes keys and
+    # baseline, so one store_dir can carry several watched marginals.
+    val_repr = value if isinstance(value, str) else str(value)
+    stream = _stream_docs(spark, docs_dir).select("doc_id", _grid_bin(val, w).alias("bin"))
 
-    _val_repr = value if isinstance(value, str) else str(value)
-    grid_tag = hashlib.md5(f"{_val_repr}|{w}".encode()).hexdigest()[:8]
-
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", val.alias("_val"))
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        bin_ = (
-            F.least(
-                F.greatest(F.floor(F.col("_val") / F.lit(w)), F.lit(0)),
-                F.lit(KS_NBINS - 1),
-            )
-        ).cast("bigint")
-        keyed = batch_df.select("doc_id", bin_.alias("bin"))
-        n_docs, batch_key = drift_batch_key(keyed)
-        if not n_docs:
-            return
-        batch_key = f"{batch_key}-g{grid_tag}"
-        counts = (
-            keyed.groupBy("bin")
-            .agg(F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
-        )
-        # baseline = every OTHER batch's stored histogram (by key, so a
-        # replayed batch excludes itself and recomputes identically)
-        base = _read_store_or_empty(
-            spark, hist_dir, "batch_key string, bin bigint, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-g{grid_tag}")
-        )
+    def statistic(counts: DataFrame, base: DataFrame | None) -> tuple:
+        if base is None:
+            return None, 0
         base_counts = base.groupBy("bin").agg(F.sum("n").alias("n"))
-        if base_counts.isEmpty():
-            ks_val, alert = None, 0
-        else:
-            bins = spark.range(KS_NBINS).select(
-                F.col("id").cast("bigint").alias("bin")
+        bins = spark.range(KS_NBINS).select(F.col("id").cast("bigint").alias("bin"))
+        wcum = W.orderBy("bin")  # 64 rows — a global window is fine
+        g = (
+            bins.join(counts.select("bin", F.col("n").alias("nb")), "bin", "left")
+            .join(base_counts.select("bin", F.col("n").alias("na")), "bin", "left")
+            .select(
+                "bin",
+                F.coalesce("nb", F.lit(0.0)).alias("nb"),
+                F.coalesce("na", F.lit(0.0)).alias("na"),
             )
-            wcum = W.orderBy("bin")  # 64 rows — a global window is fine
-            g = (
-                bins.join(
-                    counts.select("bin", F.col("n").alias("nb")), "bin", "left"
-                )
-                .join(base_counts.select("bin", F.col("n").alias("na")), "bin", "left")
-                .select(
-                    "bin",
-                    F.coalesce("nb", F.lit(0.0)).alias("nb"),
-                    F.coalesce("na", F.lit(0.0)).alias("na"),
-                )
-                .select(
-                    F.sum("nb").over(wcum).alias("cb"),
-                    F.sum("na").over(wcum).alias("ca"),
-                    F.sum("nb").over(W.partitionBy()).alias("tb"),
-                    F.sum("na").over(W.partitionBy()).alias("ta"),
-                )
+            .select(
+                F.sum("nb").over(wcum).alias("cb"),
+                F.sum("na").over(wcum).alias("ca"),
+                F.sum("nb").over(W.partitionBy()).alias("tb"),
+                F.sum("na").over(W.partitionBy()).alias("ta"),
             )
-            ks_val = (
-                g.agg(
-                    F.round(
-                        F.max(F.abs(F.col("cb") / F.col("tb") - F.col("ca") / F.col("ta"))),
-                        6,
-                    )
-                ).first()[0]
-            )
-            alert = int(ks_val is not None and ks_val > DRIFT_KS_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, ks_val, alert)],
-            "batch_key string, n_docs bigint, ks_vs_baseline double, alert int",
         )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "bin", "n"),
-            hist_dir,
-            ["batch_key", "bin"],
-            keep="existing",
-        )
+        ks_val = g.agg(
+            F.round(
+                F.max(F.abs(F.col("cb") / F.col("tb") - F.col("ca") / F.col("ta"))), 6
+            )
+        ).first()[0]
+        return ks_val, int(ks_val is not None and ks_val > DRIFT_KS_ALERT)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _keyed_gate(
+        spark,
+        stream,
+        checkpoint_dir,
+        os.path.join(store_dir, "hist_batches"),
+        os.path.join(store_dir, "drift_ledger"),
+        _config_tag("g", f"{val_repr}|{w}"),
+        lambda batch: _count_by(batch, "bin"),
+        statistic,
+        "batch_key string, n_docs bigint, ks_vs_baseline double, alert int",
     )
 
 
@@ -1649,100 +1660,68 @@ def stream_embedding_gate(
     below EMB_COS_ALERT — drift pulls the batch centroid AWAY, so the
     gate fires LOW, unlike the fire-high KS/chi-square gates).
 
-    Same store/replay discipline as stream_drift_gate:
+    Stores (keyed parquet, replay contract: :func:`_keyed_gate`):
 
     - ``emb_batches/`` (batch_key, d, s, n) — each batch's per-dim
-      component sums + counts under the deterministic
-      ``drift_batch_key`` (the vec ids keyed as doc_id);
+      component sums + counts (the vec ids keyed as doc_id, the watched
+      vector column as the tag);
     - ``emb_ledger/`` (batch_key, n_vecs, cos_vs_baseline, alert) —
       one decision row per distinct batch.
 
-    Per batch the ONLY batch-sized work is one partial/final (dim) sum
-    (<= dims rows out — the posexplode never leaves its partition
-    unaggregated); the baseline is the keyed sum of all OTHER batches'
-    stored sums, so an at-least-once replay excludes itself BY KEY,
-    recomputes the identical statistic, and both first-wins upserts
-    no-op. The first batch has no baseline: cosine null, alert 0. The
-    watched vector column is part of the store's semantics (the grid-
-    tag rule): keys scope to it and the baseline filters to it. Dims
-    are compared where BOTH sides have mass (inner join on d — the
-    ragged-safe convention of embedding_drift_frame: a short vector is
-    absent from, not zero at, its missing dims)."""
-    import hashlib
-    import os
-
+    The histogram is one partial/final (dim) sum (<= dims rows out —
+    the posexplode never leaves its partition unaggregated). The first
+    batch has no baseline: cosine null, alert 0. Ragged vectors follow
+    embedding_drift_frame: a short vector is absent from, not zero at,
+    its missing dims, so the batch centroid's norm covers every dim the
+    BATCH has (left join from the batch's dims) and the dot product and
+    the baseline's norm cover the dims both sides have — a batch whose
+    encoder widened its vectors reads a low cosine, not 1.0."""
     from eurovision_spark.operators.similarity import as_double, l2norm
-    from eurovision_spark.sinks import upsert_parquet
 
-    sum_dir = os.path.join(store_dir, "emb_batches")
-    ledger_dir = os.path.join(store_dir, "emb_ledger")
-    vec_tag = hashlib.md5(vec_col.encode()).hexdigest()[:8]
-
-    schema = spark.read.parquet(emb_dir).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(emb_dir).schema)
         .parquet(emb_dir)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            as_double(F.col(vec_col)).alias("_v"),
-        )
+        .select(F.col("vec_id").alias("doc_id"), as_double(F.col(vec_col)).alias("_v"))
         .filter(l2norm(F.col("_v")) > 0)
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_vecs, batch_key = drift_batch_key(batch_df.select("doc_id"))
-        if not n_vecs:
-            return
-        batch_key = f"{batch_key}-v{vec_tag}"
-        sums = (
-            batch_df.select(F.posexplode("_v").alias("d", "val"))
+    def histogram(batch: DataFrame) -> DataFrame:
+        return (
+            batch.select(F.posexplode("_v").alias("d", "val"))
             .groupBy("d")
             .agg(F.sum("val").alias("s"), F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
-        )
-        base = _read_store_or_empty(
-            spark, sum_dir, "batch_key string, d int, s double, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-v{vec_tag}")
-        )
-        base_sums = base.groupBy("d").agg(
-            F.sum("s").alias("bs"), F.sum("n").alias("bn")
-        )
-        if base_sums.isEmpty():
-            cos_val, alert = None, 0
-        else:
-            g = sums.join(base_sums, "d").select(
-                (F.col("s") / F.col("n")).alias("cb"),
-                (F.col("bs") / F.col("bn")).alias("ca"),
-            )
-            cos_val = g.agg(
-                F.round(
-                    F.sum(F.col("cb") * F.col("ca"))
-                    / (
-                        F.sqrt(F.sum(F.col("cb") * F.col("cb")))
-                        * F.sqrt(F.sum(F.col("ca") * F.col("ca")))
-                    ),
-                    6,
-                )
-            ).first()[0]
-            alert = int(cos_val is not None and cos_val < EMB_COS_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_vecs, cos_val, alert)],
-            "batch_key string, n_vecs bigint, cos_vs_baseline double, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            sums.select(F.lit(batch_key).alias("batch_key"), "d", "s", "n"),
-            sum_dir,
-            ["batch_key", "d"],
-            keep="existing",
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def statistic(sums: DataFrame, base: DataFrame | None) -> tuple:
+        if base is None:
+            return None, 0
+        base_sums = base.groupBy("d").agg(F.sum("s").alias("bs"), F.sum("n").alias("bn"))
+        g = sums.join(base_sums, "d", "left").select(
+            (F.col("s") / F.col("n")).alias("cb"),
+            (F.col("bs") / F.col("bn")).alias("ca"),
+        )
+        cos_val = g.agg(
+            F.round(
+                F.sum(F.col("cb") * F.col("ca"))
+                / (
+                    F.sqrt(F.sum(F.col("cb") * F.col("cb")))
+                    * F.sqrt(F.sum(F.col("ca") * F.col("ca")))
+                ),
+                6,
+            )
+        ).first()[0]
+        return cos_val, int(cos_val is not None and cos_val < EMB_COS_ALERT)
+
+    return _keyed_gate(
+        spark,
+        stream,
+        checkpoint_dir,
+        os.path.join(store_dir, "emb_batches"),
+        os.path.join(store_dir, "emb_ledger"),
+        _config_tag("v", vec_col),
+        histogram,
+        statistic,
+        "batch_key string, n_vecs bigint, cos_vs_baseline double, alert int",
     )
 
 
@@ -1776,106 +1755,56 @@ def stream_quality_drift_gate(
     construction (tests/test_streaming.py). Alert fires HIGH at the
     runbook's significant-shift line (PSI > QGATE_PSI_ALERT).
 
-    Stores (keyed parquet, the stream_drift_gate discipline):
+    Stores (keyed parquet, replay contract: :func:`_keyed_gate`):
 
     - ``qlogit_batches/`` (batch_key, bin, n) — each batch's 64-bin
-      logit histogram under the versioned 64-bit multiset batch digest,
-      tagged with the WEIGHTS digest (the grid-tag rule: a new
-      classifier version starts a new baseline instead of silently
-      mixing distributions);
+      logit histogram, tagged with the WEIGHTS digest (a new classifier
+      version starts a new baseline instead of silently mixing
+      distributions);
     - ``qlogit_ledger/`` (batch_key, n_docs, psi_vs_baseline, alert).
 
-    Per batch the only batch-sized work is the classifier's per-row
-    zero-shuffle fold into one (bin) partial/final count (<= 64 rows
-    out); the baseline folds from stored histograms (bounded: batches x
-    64 rows), never from raw text. First batch: no baseline, PSI null,
-    alert 0. Replay: the baseline excludes the batch's own key, the
-    statistic recomputes identically, both first-wins upserts no-op."""
-    import hashlib
-    import os
-
+    The histogram is the classifier's per-row zero-shuffle fold into
+    one (bin) partial/final count (<= 64 rows out). First batch: no
+    baseline, PSI null, alert 0."""
     from eurovision_spark.operators.textstats import (
-        KS_NBINS,
         QDRIFT_OFF,
         QDRIFT_W,
         psi_from_bin_counts,
         score_documents,
     )
-    from eurovision_spark.sinks import upsert_parquet
 
-    hist_dir = os.path.join(store_dir, "qlogit_batches")
-    ledger_dir = os.path.join(store_dir, "qlogit_ledger")
-    wtag = hashlib.md5(repr((list(w), b)).encode()).hexdigest()[:8]
-
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_docs, batch_key = drift_batch_key(batch_df.select("doc_id"))
-        if not n_docs:
-            return
-        batch_key = f"{batch_key}-q{wtag}"
+    def histogram(batch: DataFrame) -> DataFrame:
         qv = F.col("qc_logit") + F.lit(QDRIFT_OFF)
-        bin_ = (
-            F.least(
-                F.greatest(F.floor(qv / F.lit(QDRIFT_W)), F.lit(0)),
-                F.lit(KS_NBINS - 1),
+        return _count_by(
+            score_documents(batch, w, b).select(_grid_bin(qv, QDRIFT_W).alias("bin")),
+            "bin",
+        )
+
+    def statistic(counts: DataFrame, base: DataFrame | None) -> tuple:
+        if base is None:
+            return None, 0
+        base_counts = base.groupBy("bin").agg(F.sum("n").alias("n"))
+        two = (
+            counts.select(F.lit("__batch__").alias("source"), "bin", "n")
+            .unionByName(
+                base_counts.select(F.lit("__baseline__").alias("source"), "bin", "n")
             )
-        ).cast("bigint")
-        counts = (
-            score_documents(batch_df, w, b)
-            .select(bin_.alias("bin"))
-            .groupBy("bin")
-            .agg(F.count("*").cast("double").alias("n"))
             .localCheckpoint()
         )
-        base = _read_store_or_empty(
-            spark, hist_dir, "batch_key string, bin bigint, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-q{wtag}")
-        )
-        if base.isEmpty():
-            psi_val, alert = None, 0
-        else:
-            base_counts = base.groupBy("bin").agg(F.sum("n").alias("n"))
-            two = (
-                counts.select(F.lit("__batch__").alias("source"), "bin", "n")
-                .unionByName(
-                    base_counts.select(
-                        F.lit("__baseline__").alias("source"), "bin", "n"
-                    )
-                )
-                .localCheckpoint()
-            )
-            row = (
-                psi_from_bin_counts(two)
-                .filter(F.col("source") == "__batch__")
-                .first()
-            )
-            psi_val = row.psi_vs_rest if row else None
-            alert = int(psi_val is not None and psi_val > QGATE_PSI_ALERT)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, psi_val, alert)],
-            "batch_key string, n_docs bigint, psi_vs_baseline double, alert int",
-        )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "bin", "n"),
-            hist_dir,
-            ["batch_key", "bin"],
-            keep="existing",
-        )
+        row = psi_from_bin_counts(two).filter(F.col("source") == "__batch__").first()
+        psi_val = row.psi_vs_rest if row else None
+        return psi_val, int(psi_val is not None and psi_val > QGATE_PSI_ALERT)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _keyed_gate(
+        spark,
+        _stream_docs(spark, docs_dir).select("doc_id", "text"),
+        checkpoint_dir,
+        os.path.join(store_dir, "qlogit_batches"),
+        os.path.join(store_dir, "qlogit_ledger"),
+        _config_tag("q", repr((list(w), b))),
+        histogram,
+        statistic,
+        "batch_key string, n_docs bigint, psi_vs_baseline double, alert int",
     )
 
 
@@ -1920,8 +1849,6 @@ def stream_media_dedup(
     fingerprint fn (payload-hex region md5) for decoded-content pHash /
     chroma INSIDE the same worker; every store and join here is the
     production shape."""
-    import os
-
     from eurovision_spark.operators.multimodal import (
         REGION_FP_SCHEMA,
         REGION_MIN_SHARED,
@@ -2023,124 +1950,69 @@ def stream_lang_gate(
     passes stream_drift_gate on every numeric marginal and fires only
     here.
 
-    Same store/replay discipline as stream_drift_gate:
+    Stores (keyed parquet, replay contract: :func:`_keyed_gate`):
 
     - ``cat_batches/`` (batch_key, cat, n) — each batch's bounded
-      category histogram under the deterministic ``drift_batch_key``;
+      category histogram (<= distinct-categories rows), the watched
+      column as the tag;
     - ``lang_ledger/`` (batch_key, n_docs, chisq_vs_baseline, dof,
       alert) — one decision row per distinct batch.
 
-    Per batch the ONLY batch-sized work is one partial/final category
-    count (<= distinct-categories rows out); the baseline is the keyed
-    sum of all OTHER batches' stored histograms, so an at-least-once
-    replay excludes itself BY KEY, recomputes the identical statistic,
-    and both first-wins upserts no-op. The first batch has no
-    baseline: statistic and dof are null, alert 0. Expectations on the
-    full-join category grid are strictly positive (a grid row exists
-    only where the batch or the baseline has mass, and both totals are
-    positive once a baseline exists), so no zero denominator."""
-    import os
-
-    from eurovision_spark.sinks import upsert_parquet
-
-    cat_dir = os.path.join(store_dir, "cat_batches")
-    ledger_dir = os.path.join(store_dir, "lang_ledger")
-
-    import hashlib
-
-    cat_tag = hashlib.md5(cat.encode()).hexdigest()[:8]
-
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
+    The first batch has no baseline: statistic and dof are null, alert
+    0. Expectations on the full-join category grid are strictly
+    positive (a grid row exists only where the batch or the baseline
+    has mass, and both totals are positive once a baseline exists), so
+    no zero denominator."""
+    stream = _stream_docs(spark, docs_dir).select(
+        "doc_id",
         # null-safe category (r08 review finding): a NULL category must
         # be ONE grid cell on both sides — the full join below uses
         # non-null-safe equality, so an un-coalesced NULL would split
         # into two maximal-drift rows and fire a spurious alert
-        .select(
-            "doc_id",
-            F.coalesce(F.col(cat).cast("string"), F.lit("<null>")).alias("_cat"),
-        )
+        F.coalesce(F.col(cat).cast("string"), F.lit("<null>")).alias("cat"),
     )
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        keyed = batch_df.select("doc_id", "_cat")
-        n_docs, batch_key = drift_batch_key(keyed)
-        if not n_docs:
-            return
-        # the watched column is part of the store's semantics (the
-        # numeric gate's grid-tag rule): keys scope to it, the baseline
-        # filters to it, so one store_dir can watch several columns
-        batch_key = f"{batch_key}-c{cat_tag}"
-        counts = (
-            keyed.groupBy("_cat")
-            .agg(F.count("*").cast("double").alias("n"))
-            .localCheckpoint()
-        )
-        base = _read_store_or_empty(
-            spark, cat_dir, "batch_key string, cat string, n double"
-        ).filter(
-            (F.col("batch_key") != batch_key)
-            & F.col("batch_key").endswith(f"-c{cat_tag}")
-        )
+    def statistic(counts: DataFrame, base: DataFrame | None) -> tuple:
+        if base is None:
+            return None, None, 0
         base_counts = base.groupBy("cat").agg(F.sum("n").alias("n"))
-        if base_counts.isEmpty():
-            chisq_val, dof, alert = None, None, 0
-        else:
-            b = counts.select(F.col("_cat").alias("cat"), F.col("n").alias("nb"))
-            a = base_counts.select("cat", F.col("n").alias("na"))
-            g = (
-                b.join(a, "cat", "full")
-                .select(
-                    "cat",
-                    F.coalesce("nb", F.lit(0.0)).alias("nb"),
-                    F.coalesce("na", F.lit(0.0)).alias("na"),
-                )
-                .select(
-                    "nb",
-                    "na",
-                    F.sum("nb").over(W.partitionBy()).alias("tb"),
-                    F.sum("na").over(W.partitionBy()).alias("ta"),
-                )
+        g = (
+            counts.select("cat", F.col("n").alias("nb"))
+            .join(base_counts.select("cat", F.col("n").alias("na")), "cat", "full")
+            .select(
+                "cat",
+                F.coalesce("nb", F.lit(0.0)).alias("nb"),
+                F.coalesce("na", F.lit(0.0)).alias("na"),
             )
-            t = F.col("nb") + F.col("na")
-            tot = F.col("tb") + F.col("ta")
-            e_b = t * F.col("tb") / tot
-            e_a = t * F.col("ta") / tot
-            term = (F.col("nb") - e_b) * (F.col("nb") - e_b) / e_b + (
-                F.col("na") - e_a
-            ) * (F.col("na") - e_a) / e_a
-            row = g.agg(
-                F.round(F.sum(term), 6).alias("chisq"), F.count("*").alias("k")
-            ).first()
-            chisq_val, dof = row.chisq, int(row.k) - 1
-            alert = int(
-                chisq_val is not None
-                and chisq_val > CHISQ_ALERT_PER_DOF * max(dof, 1)
+            .select(
+                "nb",
+                "na",
+                F.sum("nb").over(W.partitionBy()).alias("tb"),
+                F.sum("na").over(W.partitionBy()).alias("ta"),
             )
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_docs, chisq_val, dof, alert)],
-            "batch_key string, n_docs bigint, chisq_vs_baseline double, "
-            "dof int, alert int",
         )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(
-                F.lit(batch_key).alias("batch_key"),
-                F.col("_cat").alias("cat"),
-                "n",
-            ),
-            cat_dir,
-            ["batch_key", "cat"],
-            keep="existing",
-        )
+        t = F.col("nb") + F.col("na")
+        tot = F.col("tb") + F.col("ta")
+        e_b = t * F.col("tb") / tot
+        e_a = t * F.col("ta") / tot
+        term = (F.col("nb") - e_b) * (F.col("nb") - e_b) / e_b + (
+            F.col("na") - e_a
+        ) * (F.col("na") - e_a) / e_a
+        row = g.agg(F.round(F.sum(term), 6).alias("chisq"), F.count("*").alias("k")).first()
+        chisq_val, dof = row.chisq, int(row.k) - 1
+        alert = int(chisq_val is not None and chisq_val > CHISQ_ALERT_PER_DOF * max(dof, 1))
+        return chisq_val, dof, alert
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _keyed_gate(
+        spark,
+        stream,
+        checkpoint_dir,
+        os.path.join(store_dir, "cat_batches"),
+        os.path.join(store_dir, "lang_ledger"),
+        _config_tag("c", cat),
+        lambda batch: _count_by(batch, "cat"),
+        statistic,
+        "batch_key string, n_docs bigint, chisq_vs_baseline double, dof int, alert int",
     )
 
 
@@ -2165,11 +2037,11 @@ def stream_rate_gate(
     corpus's FULL per-type hourly distribution — the baseline that is
     incrementally maintainable from bounded per-batch histograms).
 
-    Stores (keyed parquet, the stream_drift_gate discipline):
+    Stores (keyed parquet, replay contract: :func:`_keyed_gate`; the
+    gate watches one fixed grid, so its tag is empty):
 
     - ``rate_batches/`` (batch_key, event_type, bucket, n) — each
-      batch's (type, hour) count grid under the versioned 64-bit
-      multiset batch digest (drift_batch_key over event ids);
+      batch's (type, hour) count grid (event ids keyed as doc_id);
     - ``rate_ledger/`` (batch_key, n_events, n_cells, n_anomalous,
       alert) — one decision row per distinct batch.
 
@@ -2182,9 +2054,7 @@ def stream_rate_gate(
     rate_anomaly (k*sumsq = sum^2 — no epsilon), where a deviating
     arriving cell alerts by integer compare. Types unseen in the
     baseline contribute no verdict (NULL z, not anomalous — nothing
-    to deviate from). First batch: no baseline, alert 0. Replay: the
-    baseline excludes the batch's own key, so the statistic recomputes
-    identically and both first-wins upserts no-op.
+    to deviate from). First batch: no baseline, alert 0.
 
     Scope, stated plainly (what this gate can and cannot fire on):
 
@@ -2205,12 +2075,6 @@ def stream_rate_gate(
       dropout alert for that batch). The replay/wave tests pin the
       aligned form; an aligned trigger (processingTime on the hour) or
       the batch twin adjudicates the sliced case."""
-    import os
-
-    from eurovision_spark.sinks import upsert_parquet
-
-    rates_dir = os.path.join(store_dir, "rate_batches")
-    ledger_dir = os.path.join(store_dir, "rate_ledger")
     HOUR_US = 3_600_000_000
 
     raw = stream_events_source(spark, events_dir)
@@ -2220,80 +2084,55 @@ def stream_rate_gate(
     # + floor would diverge from the batch twin at pre-epoch ts and
     # lose integer exactness past 2^53
     stream = raw.select(
-        "event_id",
+        F.col("event_id").alias("doc_id"),
         "event_type",
         ts_us_col(raw.schema["ts"].dataType).alias("_ts_us"),
-    ).select(
-        "event_id",
-        "event_type",
-        F.expr(f"_ts_us div {HOUR_US}").alias("bucket"),
-    )
+    ).select("doc_id", "event_type", F.expr(f"_ts_us div {HOUR_US}").alias("bucket"))
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        n_events, batch_key = drift_batch_key(
-            batch_df.select(F.col("event_id").alias("doc_id"))
+    def histogram(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("event_type", "bucket").agg(
+            F.count("*").cast("bigint").alias("n")
         )
-        if not n_events:
-            return
-        counts = (
-            batch_df.groupBy("event_type", "bucket")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint()
-        )
-        base = _read_store_or_empty(
-            spark, rates_dir, "batch_key string, event_type string, bucket bigint, n bigint"
-        ).filter(F.col("batch_key") != batch_key)
+
+    def statistic(counts: DataFrame, base: DataFrame | None) -> tuple:
+        n_cells = counts.count()
+        if base is None:
+            return n_cells, 0, 0
         landed = base.groupBy("event_type", "bucket").agg(
             F.sum("n").cast("bigint").alias("n")
         )
-        n_cells = counts.count()
-        if landed.isEmpty():
-            n_anom, alert = 0, 0
-        else:
-            # per-type exact-integer stats over the landed span: hours
-            # between a type's min and max with no events are genuine
-            # zeros — they enter k, never the sums
-            stats = landed.groupBy("event_type").agg(
-                (F.max("bucket") - F.min("bucket") + 1).cast("bigint").alias("k"),
-                F.sum("n").cast("bigint").alias("s"),
-                F.sum(F.col("n") * F.col("n")).cast("bigint").alias("sq"),
-            )
-            j = counts.join(stats, "event_type", "left")
-            flat = F.col("k") * F.col("sq") == F.col("s") * F.col("s")
-            mean = F.col("s") / F.col("k")
-            var = (F.col("sq") - F.col("s") * F.col("s") / F.col("k")) / (
-                F.col("k") - 1
-            )
-            z = F.round(
-                (F.col("n") - mean) / F.sqrt(F.greatest(var, F.lit(0.0))), 4
-            )
-            anom = (
-                F.when(F.col("k").isNull(), F.lit(0))  # unseen type: no verdict
-                .when(F.col("k") < 2, F.lit(0))  # one landed hour: no spread
-                .when(flat, (F.col("n") * F.col("k") != F.col("s")).cast("int"))
-                .otherwise((F.abs(z) > RATE_Z_ALERT).cast("int"))
-            )
-            n_anom = int(
-                j.agg(F.coalesce(F.sum(anom), F.lit(0))).first()[0]
-            )
-            alert = int(n_anom > 0)
-        ledger_row = spark.createDataFrame(
-            [(batch_key, n_events, n_cells, n_anom, alert)],
-            "batch_key string, n_events bigint, n_cells bigint, "
-            "n_anomalous bigint, alert int",
+        # per-type exact-integer stats over the landed span: hours
+        # between a type's min and max with no events are genuine
+        # zeros — they enter k, never the sums
+        stats = landed.groupBy("event_type").agg(
+            (F.max("bucket") - F.min("bucket") + 1).cast("bigint").alias("k"),
+            F.sum("n").cast("bigint").alias("s"),
+            F.sum(F.col("n") * F.col("n")).cast("bigint").alias("sq"),
         )
-        upsert_parquet(ledger_row, ledger_dir, ["batch_key"], keep="existing")
-        upsert_parquet(
-            counts.select(F.lit(batch_key).alias("batch_key"), "*"),
-            rates_dir,
-            ["batch_key", "event_type", "bucket"],
-            keep="existing",
+        j = counts.join(stats, "event_type", "left")
+        flat = F.col("k") * F.col("sq") == F.col("s") * F.col("s")
+        mean = F.col("s") / F.col("k")
+        var = (F.col("sq") - F.col("s") * F.col("s") / F.col("k")) / (F.col("k") - 1)
+        z = F.round((F.col("n") - mean) / F.sqrt(F.greatest(var, F.lit(0.0))), 4)
+        anom = (
+            F.when(F.col("k").isNull(), F.lit(0))  # unseen type: no verdict
+            .when(F.col("k") < 2, F.lit(0))  # one landed hour: no spread
+            .when(flat, (F.col("n") * F.col("k") != F.col("s")).cast("int"))
+            .otherwise((F.abs(z) > RATE_Z_ALERT).cast("int"))
         )
+        n_anom = int(j.agg(F.coalesce(F.sum(anom), F.lit(0))).first()[0])
+        return n_cells, n_anom, int(n_anom > 0)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _keyed_gate(
+        spark,
+        stream,
+        checkpoint_dir,
+        os.path.join(store_dir, "rate_batches"),
+        os.path.join(store_dir, "rate_ledger"),
+        "",
+        histogram,
+        statistic,
+        "batch_key string, n_events bigint, n_cells bigint, n_anomalous bigint, alert int",
     )
 
 
@@ -2364,8 +2203,6 @@ def stream_contamination_gate(
     word-map pre-probe (the batch pair documents the trade). Replay:
     recomputed verdicts are identical and both first-wins upserts
     no-op."""
-    import os
-
     from eurovision_spark.operators.dedup import shingles
     from eurovision_spark.operators.pipeline import CONTAM_THRESHOLD
     from eurovision_spark.operators.textstats import md5_long, tokens
@@ -2375,13 +2212,7 @@ def stream_contamination_gate(
     verdict_dir = os.path.join(store_dir, "contam_verdicts")
     ledger_dir = os.path.join(store_dir, "contam_ledger")
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(docs_dir)
-        .filter(F.col("n_chars") > 0)
-        .select("doc_id", "text")
-    )
+    stream = _stream_docs(spark, docs_dir).select("doc_id", "text")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         n_docs, batch_key = drift_batch_key(batch_df.select("doc_id"))

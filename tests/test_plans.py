@@ -697,14 +697,15 @@ def test_bucketed_signature_store_probe_is_exchange_free(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from eurovision_spark.operators.dedup import (
-        _minhash_signatures,
         banded_signatures,
+        doc_index,
         docs_with_copies,
+        index_signatures,
     )
     from eurovision_spark.sinks import write_bucketed
 
     docs = docs_with_copies(spark, SF_DIR)
-    bands = banded_signatures(_minhash_signatures(docs))
+    bands = banded_signatures(index_signatures(doc_index(docs)))
     write_bucketed(bands, "b_sigstore", "band_sig", 8, str(tmp_path / "store"))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

@@ -1448,6 +1448,12 @@ def test_refresh_corpus_splits_cluster_when_bridge_retired(spark, tmp_path):
     assert snap(leaf, "edges") == [(101, 102)]
 
 
+def _query_jobs(spark, q) -> int:
+    """Spark jobs a streaming query has run: each micro-batch runs under
+    the job group ``str(q.runId)``."""
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
 def test_stream_drift_gate_alerts_and_is_replay_stable(spark, tmp_path):
     """The intake drift gate: same-distribution batches pass (low KS,
     no alert), a shifted batch alarms (disjoint support -> KS 1.0),
@@ -1493,6 +1499,7 @@ def test_stream_drift_gate_alerts_and_is_replay_stable(spark, tmp_path):
         )
         shutil.copy(docs_dir / "w3.parquet", docs_dir / "w3_replay.parquet")
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 52  # job budget: 3 waves + a replay
     finally:
         q.stop()
 
@@ -1523,6 +1530,51 @@ def test_stream_drift_gate_alerts_and_is_replay_stable(spark, tmp_path):
         r.source: r.ks_vs_rest for r in ks_drift_frame(union).collect()
     }
     assert batch_ks["w3"] == third.ks_vs_baseline
+
+
+def test_stream_drift_gate_recrawled_batch_does_not_fold_into_baseline(spark, tmp_path):
+    """A wave that re-sends landed ids with recrawled content has the
+    landed wave's batch key (the key digests the id multiset), so its
+    ledger upsert is a no-op — and its histogram must be one too. Keyed
+    on (batch_key, bin), the recrawl's new bins were folded under the
+    landed key: the baseline held 600 docs of mass under a 300-doc
+    ledger row, and a later wave distributed like the first read KS 0.5
+    with a spurious alert."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from eurovision_spark.streaming.ingest import stream_drift_gate
+
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    store = tmp_path / "store"
+
+    def wave(name, rows):
+        spark.createDataFrame(
+            rows, "doc_id bigint, text string, n_chars int"
+        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
+        part = next((tmp_path / name).glob("part-*.parquet"))
+        shutil.copy(part, docs_dir / f"{name}.parquet")
+
+    wave("w1", [(i, "x", 100 + (i % 7)) for i in range(300)])
+    q = stream_drift_gate(spark, str(docs_dir), str(store), str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        wave("w1b", [(i, "x", 1500 + (i % 5)) for i in range(300)])  # recrawl
+        q.processAllAvailable()
+        wave("w2", [(1000 + i, "x", 100 + (i % 7)) for i in range(300)])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    hist = spark.read.parquet(str(store / "hist_batches"))
+    mass = hist.groupBy("batch_key").agg(F.sum("n").alias("n")).collect()
+    assert sorted(r.n for r in mass) == [300.0, 300.0]  # one wave's docs per key
+    rows = spark.read.parquet(str(store / "drift_ledger")).collect()
+    assert len(rows) == 2
+    w2 = next(r for r in rows if r.ks_vs_baseline is not None)
+    assert w2.ks_vs_baseline == 0.0 and w2.alert == 0
 
 
 def test_drift_batch_key_is_64_bit_and_survives_32_bit_collisions(spark):
@@ -1582,6 +1634,7 @@ def test_stream_lang_gate_alerts_and_is_replay_stable(spark, tmp_path):
     changes neither the ledger nor the stored category histograms."""
     import shutil
 
+    from eurovision_spark.operators.textstats import chisq_drift_frame
     from eurovision_spark.streaming.ingest import stream_lang_gate
 
     docs_dir = tmp_path / "docs"
@@ -1614,6 +1667,7 @@ def test_stream_lang_gate_alerts_and_is_replay_stable(spark, tmp_path):
         )
         shutil.copy(docs_dir / "w3.parquet", docs_dir / "w3_replay.parquet")
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 49  # job budget: 3 waves + a replay
     finally:
         q.stop()
 
@@ -1638,6 +1692,17 @@ def test_stream_lang_gate_alerts_and_is_replay_stable(spark, tmp_path):
     assert hist_before == sorted(
         map(tuple, spark.read.parquet(str(store / "cat_batches")).collect())
     )
+
+    # batch-twin parity: with exactly two sources, chisq_drift's
+    # source-vs-rest IS the batch-vs-baseline statistic the gate computed
+    union = spark.createDataFrame(
+        [("base", lang) for _, lang, _ in mix(0, ["en", "de"]) + mix(1000, ["en", "de"])]
+        + [("w3", lang) for _, lang, _ in mix(2000, ["zz"])],
+        "source string, lang string",
+    )
+    twin = {r.source: r for r in chisq_drift_frame(union).collect()}
+    assert twin["w3"].chisq_vs_rest == third.chisq_vs_baseline
+    assert twin["w3"].dof == third.dof
 
 
 def test_stream_lang_gate_null_category_is_one_cell(spark, tmp_path):
@@ -1775,6 +1840,7 @@ def test_stream_embedding_gate_alerts_and_is_replay_stable(spark, tmp_path):
         )
         shutil.copy(emb_dir / "w3.parquet", emb_dir / "w3_replay.parquet")
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 49  # job budget: 3 waves + a replay
     finally:
         q.stop()
 
@@ -1807,6 +1873,54 @@ def test_stream_embedding_gate_alerts_and_is_replay_stable(spark, tmp_path):
     )
     twin = {r.label: r.cos_vs_rest for r in embedding_drift_frame(union).collect()}
     assert abs(twin[1] - low.cos_vs_baseline) <= 1e-6
+
+
+def test_stream_embedding_gate_ragged_batch_matches_its_twin(spark, tmp_path):
+    """An encoder that widens its vectors must not pass the gate. The
+    batch centroid's norm covers every dim the BATCH has, as in
+    embedding_drift_frame (a short vector is absent from, not zero at,
+    its missing dims): baseline [1,0] vs batch [1,0,5] reads
+    1/sqrt(26) = 0.196116 there. An inner join on the dim dropped the
+    batch's extra dim and read 1.0."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from eurovision_spark.operators.similarity import as_double, embedding_drift_frame
+    from eurovision_spark.streaming.ingest import stream_embedding_gate
+
+    emb_dir = tmp_path / "emb"
+    emb_dir.mkdir()
+    store = tmp_path / "store"
+    w1 = [(i, [1.0, 0.0]) for i in range(20)]
+    w2 = [(100 + i, [1.0, 0.0, 5.0]) for i in range(20)]
+
+    def wave(name, rows):
+        spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<float>"
+        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / name))
+        part = next((tmp_path / name).glob("part-*.parquet"))
+        shutil.copy(part, emb_dir / f"{name}.parquet")
+
+    wave("w1", w1)
+    q = stream_embedding_gate(spark, str(emb_dir), str(store), str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        wave("w2", w2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    rows = spark.read.parquet(str(store / "emb_ledger")).collect()
+    scored = [r for r in rows if r.cos_vs_baseline is not None]
+    assert len(rows) == 2 and len(scored) == 1
+    union = spark.createDataFrame(
+        [(0, v) for _, v in w1] + [(1, v) for _, v in w2],
+        "label int, embedding array<float>",
+    ).select("label", as_double(F.col("embedding")).alias("v"))
+    twin = {r.label: r.cos_vs_rest for r in embedding_drift_frame(union).collect()}
+    assert twin[1] == 0.196116
+    assert scored[0].cos_vs_baseline == twin[1] and scored[0].alert == 1
 
 
 def test_stream_split_assign_inherits_detects_conflicts_and_replays(spark, tmp_path):
@@ -1991,6 +2105,7 @@ def test_stream_rate_gate_flags_spike_and_replays_stable(spark, tmp_path):
             .count()
         )
         assert n_batches == len(l3)  # baseline never double-counted
+        assert _query_jobs(spark, q) <= 60  # job budget: 3 waves + a replay
     finally:
         q.stop()
 
@@ -2055,6 +2170,7 @@ def test_stream_quality_gate_flags_boilerplate_flood_and_replays(spark, tmp_path
         )
         shutil.copy(docs_dir / "w3.parquet", docs_dir / "w3_replay.parquet")
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 58  # job budget: 3 waves + a replay
     finally:
         q.stop()
 

@@ -333,7 +333,7 @@ def main() -> None:
             "gopher_rules' pure rule map, the per-row signature work "
             "here is heavy enough that the one narrow exchange pays "
             "for itself at every measured tier — the "
-            "_minhash_signatures rationale applies, not the "
+            "minhash_from_shingles rationale applies, not the "
             "gopher_rules one.\n"
             "- **minhash_lsh_jaccard's AQE-off bounded-build scope "
             "(r11, A/B-ed at x10 per VERDICT r10 item #3 — KEPT, "
