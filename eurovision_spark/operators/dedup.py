@@ -525,7 +525,7 @@ def adaptive_verify_join(
     k1: str = "doc_id_1",
     k2: str = "doc_id_2",
     payload_row_bytes: int = PAYLOAD_ROW_BYTES_HINT,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Join the per-doc verify sides onto a candidate pair list with a
     DENSITY-ADAPTIVE strategy: the pair list is materialized once
     (localCheckpoint — callers were already paying this to truncate
@@ -555,7 +555,11 @@ def adaptive_verify_join(
     landing as 'new' below the Jaccard threshold) makes that product
     unbounded — an uncounted broadcast there is a driver OOM waiting
     for the wrong corpus. The per-call cost of the valve is ONE Spark
-    job (see below), which is what hot callers actually pay."""
+    job (see below), which is what hot callers actually pay.
+
+    Returns ``(joined, n_pairs)``: the measured candidate count bounds
+    the verified edges, so CC callers pass it on as ``cc_edge_list``'s
+    ``n_edges_hint`` instead of paying their own count job."""
     enriched = lambda p: F.broadcast(s1.join(F.broadcast(p), k1))  # noqa: E731
     # LAZY checkpoint + count = ONE Spark job (the count materializes
     # the truncated leaf); the old eager-checkpoint-then-count shape
@@ -579,11 +583,7 @@ def adaptive_verify_join(
         out = pairs.join(s1.hint("shuffle_hash"), k1).join(
             s2.hint("shuffle_hash"), k2
         )
-    # the measured candidate count rides along so downstream consumers
-    # (cc_edge_list sizing) can skip their own count action — a Python
-    # attribute, invisible to the plan
-    out._sg_n_pairs = n  # noqa: SLF001
-    return out
+    return out, n
 
 
 # ---------------------------------------------------------------------------
@@ -735,10 +735,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would shrink the zero-exchange broadcast tier from 50k to 16k
     # pairs for no reason. ~16 bytes/row (id + sig) keeps the tier at
     # its full candidate bound while the byte cap still guards it.
-    return (
-        adaptive_verify_join(s1, pairs, s2, payload_row_bytes=16)
-        .filter(ham <= SIM_HAM_K)
-        .select("doc_id_1", "doc_id_2", ham.cast("int").alias("hamming"))
+    joined, _ = adaptive_verify_join(s1, pairs, s2, payload_row_bytes=16)
+    return joined.filter(ham <= SIM_HAM_K).select(
+        "doc_id_1", "doc_id_2", ham.cast("int").alias("hamming")
     )
 
 
@@ -793,7 +792,7 @@ def minhash_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         sets=copies_shingle_sets(spark, sf_dir),
         threshold=None,
         with_jaccard=True,
-    )
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -974,8 +973,9 @@ def near_edges_plan(
     threshold: float | None = None,
     with_jaccard: bool = False,
     sets: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The UNMATERIALIZED verified-near-edge plan (edges, sets): LSH
+) -> tuple[DataFrame, DataFrame, int]:
+    """The UNMATERIALIZED verified-near-edge plan (edges, sets,
+    n_pairs — the candidate count the verify measured): LSH
     banded candidates over a shared cached distinct-shingle frame, then
     exact word-3-gram Jaccard — filtered to ``>= threshold`` when one
     is given, with the jaccard value emitted when ``with_jaccard``.
@@ -1028,7 +1028,7 @@ def near_edges_plan(
     isect = F.size(F.array_intersect("hs1", "hs2"))
     union_size = F.size("hs1") + F.size("hs2") - isect
     jaccard = isect.cast("double") / union_size
-    joined = adaptive_verify_join(s1, pairs, s2)
+    joined, n_pairs = adaptive_verify_join(s1, pairs, s2)
     verified = joined.filter(
         (union_size > 0) & (jaccard >= threshold)
         if threshold is not None
@@ -1037,9 +1037,7 @@ def near_edges_plan(
     cols = ["doc_id_1", "doc_id_2"]
     if with_jaccard:
         cols.append(F.round(jaccard, 6).alias("jaccard"))
-    out = verified.select(*cols)
-    out._sg_n_pairs = getattr(joined, "_sg_n_pairs", None)  # noqa: SLF001
-    return out, sets
+    return verified.select(*cols), sets, n_pairs
 
 
 def verified_near_edges(
@@ -1047,7 +1045,7 @@ def verified_near_edges(
     sets: DataFrame | None = None,
     threshold: float | None = CLUSTER_JACCARD_T,
     with_jaccard: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """(doc_id_1 < doc_id_2) VERIFIED near-dup edges for a
     (doc_id, text) corpus, materialized as a plan LEAF. The verification
     joins mirror minhash_lsh_jaccard: broadcast the (small) candidate
@@ -1066,7 +1064,10 @@ def verified_near_edges(
     downstream CC-round and assembly action plans against a leaf
     instead of re-analyzing the whole LSH+verify tree (driver-side
     analysis of that tree was costing more than some of the actions
-    themselves) — and the shingle cache is released before returning."""
+    themselves) — and the shingle cache is released before returning.
+
+    Returns ``(edges, n_pairs)``, ``n_pairs`` being the verify's
+    candidate count (see :func:`adaptive_verify_join`)."""
     # AQE off for the edge derivation's two actions (the candidate
     # count and the edge checkpoint) — the cc_edge_list trade, scoped
     # the same way (concurrent callers wait, never inherit it): the
@@ -1085,19 +1086,14 @@ def verified_near_edges(
     spark = (docs if sets is None else sets).sparkSession
     aqe = "spark.sql.adaptive.enabled"
     with scoped_conf(spark, {aqe: "false"}) as prev:
-        plan_edges, sets = near_edges_plan(
+        plan_edges, sets, n_pairs = near_edges_plan(
             docs, threshold=threshold, with_jaccard=with_jaccard, sets=sets
         )
-        n_pairs = getattr(plan_edges, "_sg_n_pairs", None)
-        if n_pairs is not None and n_pairs > PAIR_PAYLOAD_BROADCAST_LIMIT:
+        if n_pairs > PAIR_PAYLOAD_BROADCAST_LIMIT:
             spark.conf.set(aqe, prev[aqe] or "true")
         edges = plan_edges.localCheckpoint()
-    # the candidate count measured inside the adaptive verify rides
-    # along: cc_edge_list sizes its loop exchanges from it (edge count
-    # <= pair count) without paying its own count action
-    edges._sg_n_pairs = n_pairs  # noqa: SLF001
     sets.unpersist()
-    return edges
+    return edges, n_pairs
 
 
 @register(
@@ -1123,7 +1119,7 @@ def verified_near_edges(
 def minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from eurovision_spark.operators.imp_dedup import cc_edge_list
 
-    edges = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
+    edges, n_pairs = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
     labels = cc_edge_list(
         edges,
         "doc_id_1",
@@ -1135,7 +1131,7 @@ def minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         leaf=False,
         # the verify's candidate count bounds the edge volume: sizes
         # the loop without cc paying its own count action
-        n_edges_hint=getattr(edges, "_sg_n_pairs", None),
+        n_edges_hint=n_pairs,
     )
     return labels.select(
         F.col("node").cast("bigint").alias("doc_id"),
@@ -1217,7 +1213,7 @@ def near_dup_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
         sets=copies_shingle_sets(spark, sf_dir),
         threshold=None,
         with_jaccard=True,
-    ).select("jaccard")
+    )[0].select("jaccard")
     binned = jac.select(
         F.least(
             F.floor(F.col("jaccard") * JACC_NBINS), F.lit(JACC_NBINS - 1)
@@ -1286,7 +1282,7 @@ SOURCE_OVERLAP_ORACLE = VERIFIED_EDGES_CTES_SQL + f"""
     driver=False,  # registry-gated: oracle-checked at sf0.001 (pytest) + sf0.01 (verify)
 )
 def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
+    edges, _ = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
     src = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
 
     def orig(c: str) -> Column:
@@ -1507,11 +1503,10 @@ def incremental_probe(
     # for a tiny batch), and refresh_corpus additionally routes whole
     # recrawl DELTAS through this probe. The valve costs one fused
     # checkpoint+count job per call (adaptive_verify_join).
-    near_pairs = (
-        adaptive_verify_join(si, cand, se, k1="inc_id", k2="ex_id")
-        .filter((union_size > 0) & (jac >= CLUSTER_JACCARD_T))
-        .select("inc_id", "ex_id")
-    )
+    joined, _ = adaptive_verify_join(si, cand, se, k1="inc_id", k2="ex_id")
+    near_pairs = joined.filter(
+        (union_size > 0) & (jac >= CLUSTER_JACCARD_T)
+    ).select("inc_id", "ex_id")
     return exact, near_pairs
 
 
@@ -1738,10 +1733,9 @@ def dedup_decision_frames(
         .persist()
     )
     surv = mapc.filter(F.col("doc_id") == F.col("c")).select("doc_id", "text")
-    ne = verified_near_edges(surv)
+    ne, n_pairs = verified_near_edges(surv)
     labels = cc_edge_list(
-        ne, "doc_id_1", "doc_id_2", materialized=True,
-        n_edges_hint=getattr(ne, "_sg_n_pairs", None),
+        ne, "doc_id_1", "doc_id_2", materialized=True, n_edges_hint=n_pairs
     )
     # ONE labels lookup keyed on the canonical id (r11, guide §2.4 —
     # VERDICT r10 item #2): the old assembly joined the CC labels twice

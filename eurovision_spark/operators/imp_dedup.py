@@ -8,21 +8,17 @@ transitive, so the order-insensitive formalization is **connected
 components over the "shares a non-empty key value" graph** per group
 (SURVEY §2.4 A7, §7 hard item 4 — fixtures pin the CC answer).
 
-Two implementations, chosen by whether a component can outgrow one
-group:
-
-- :func:`cc_bounded_groups_array` (the default for bounded fan-out like
-  IMP lists): pack each group into one array, min-label propagation via
-  higher-order functions INSIDE the array — one shuffle, zero Python,
-  zero iteration jobs.
-- :func:`connected_components_any_key` (unbounded components): a
-  star-edge reduction (per (group, key, value) set, everyone links to
-  the min entry) onto the shared edge-list engine
-  :func:`cc_edge_list`, which picks its path by the graph's size: up
-  to ``LOCAL_CC_EDGES`` edges, one bounded Arrow collect and a driver
-  union-find (~1 job); above it, two-hop Spark rounds with a fused
-  fixpoint test and pointer doubling for O(log diameter) convergence.
-  No GraphFrames dependency.
+The IMP merge runs :func:`cc_bounded_groups_array`: IMP lists are
+bounded (< 10 entries per trial, README.md:27), so each group packs
+into one array and min-label propagation runs via higher-order
+functions INSIDE the array — one shuffle, zero Python, zero iteration
+jobs. Graphs whose components are not bounded by a group (near-dup
+edge lists, the streaming cluster stores) go through the shared
+edge-list engine :func:`cc_edge_list`, which picks its path by the
+graph's size: up to ``LOCAL_CC_EDGES`` edges, one bounded Arrow
+collect and a driver union-find (~1 job); above it, two-hop Spark
+rounds with a fused fixpoint test and pointer doubling for O(log
+diameter) convergence. No GraphFrames dependency.
 
 Survivor policy (deterministic, order-insensitive):
 - trade / product: shortest non-empty value, ties -> lexicographic min
@@ -51,59 +47,16 @@ from eurovision_spark.session import scoped_conf
 # warm time.
 LOCAL_CC_EDGES = 20_000
 
-
-def connected_components_any_key(
-    entries: DataFrame,
-    group_col: str,
-    entry_col: str,
-    key_cols: list[str],
-    max_iter: int = 20,
-) -> DataFrame:
-    """Label each row with ``comp`` = min ``entry_col`` reachable through
-    chains of shared non-null key values within ``group_col``.
-
-    ``entry_col`` must be unique within a group and orderable.
-
-    Implemented as a STAR-EDGE reduction onto :func:`cc_edge_list`: per
-    (group, key, value) co-occurrence set the min entry acts as hub and
-    every member gets one (member, hub) edge — edge count is linear in
-    the input (never pairwise within a heavy key group), components are
-    preserved (everyone sharing a value reaches everyone else through
-    the hub), and the solve inherits cc_edge_list's two-hop rounds,
-    pointer doubling (O(log diameter) — long cross-key chains converge
-    instead of raising), and lineage truncation. Nodes are
-    (group, entry) structs, so components can never leak across groups.
-    Entries with no non-null key keep their own label.
-    """
-    node = F.struct(F.col(group_col).alias("g"), F.col(entry_col).alias("e"))
-    parts = []
-    for k in key_cols:
-        keyed = entries.filter(F.col(k).isNotNull()).select(
-            F.col(group_col).alias("_g"),
-            F.col(k).alias("_k"),
-            node.alias("src"),
-        )
-        hubs = keyed.groupBy("_g", "_k").agg(F.min("src").alias("dst"))
-        parts.append(keyed.join(hubs, ["_g", "_k"]).select("src", "dst"))
-    edges = parts[0]
-    for p in parts[1:]:
-        edges = edges.unionByName(p)
-    labels = cc_edge_list(edges, "src", "dst", max_iter=max_iter)
-    lab = labels.select(
-        F.col("node.g").alias(group_col),
-        F.col("node.e").alias(entry_col),
-        F.col("comp.e").alias("_comp"),
-    )
-    return entries.join(lab, [group_col, entry_col], "left").withColumn(
-        "comp", F.coalesce(F.col("_comp"), F.col(entry_col))
-    ).drop("_comp")
+# the Spark rounds' budget: pointer doubling covers component diameters
+# into the tens of thousands of hops within CC_MAX_ROUNDS, and the label
+# frame's lineage is truncated every CC_CHECKPOINT_EVERY rounds
+CC_MAX_ROUNDS = 15
+CC_CHECKPOINT_EVERY = 3
 
 
 def cc_edge_list(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 15,
-    checkpoint_every: int = 3, materialized: bool = False,
-    leaf: bool = True, loop_partitions: int | None = None,
-    reliable: bool = False, n_edges_hint: int | None = None,
+    edges: DataFrame, src: str, dst: str, *, materialized: bool = False,
+    leaf: bool = True, reliable: bool = False, n_edges_hint: int | None = None,
 ) -> DataFrame:
     """Connected components over a global (src, dst) edge list: label
     every endpoint with the min node id reachable through the graph.
@@ -124,13 +77,12 @@ def cc_edge_list(
     0.3-0.45 s up to 20k edges; the warm crossover lies between 50k and
     100k edges (4 cores; measurements beside the constant), and the
     bound sits well below it. The driver path serves only id types
-    whose Python order equals Spark's ``least``/``min`` (integral ids,
-    binary-collated strings, structs of those, e.g. the
-    ``(group, entry)`` nodes of :func:`connected_components_any_key`)
-    and graphs with no NULL id; everything else, and every graph above
-    the bound, takes the Spark rounds — the only path that can serve a
-    corpus-sized graph. A non-materialized input is persisted before
-    the collect, so a fallback does not recompute it.
+    whose Python order equals Spark's ``least``/``min`` (integral ids
+    and binary-collated strings) and graphs with no NULL id; everything
+    else (struct ids included), and every graph above the bound, takes
+    the Spark rounds — the only path that can serve a corpus-sized
+    graph. A non-materialized input is persisted before the collect,
+    so a fallback does not recompute it.
 
     The Spark rounds: min-label propagation, TWO hops per Spark action,
     with pointer doubling from round 2 on: each round applies the
@@ -142,16 +94,16 @@ def cc_edge_list(
     converges in ONE action after the seed. Deeper graphs engage the
     ``comp := comp(comp)`` path-halving jump from round 2, so reach
     grows geometrically and convergence is O(log diameter) rounds, not
-    O(diameter) — a 200-hop chain converges well inside the default
-    max_iter (pinned in tests/test_pipeline_ops.py). That holds when ids
-    run monotone along a chain; with ids shuffled along it the jump
-    buys little (measured: a 100-node path needs 31-60 rounds, a
-    200-node path does not converge in 15; pinned as a known defect by
-    an xfail test in tests/test_pipeline_ops.py).
+    O(diameter) — a 200-hop chain converges well inside
+    ``CC_MAX_ROUNDS`` (pinned in tests/test_pipeline_ops.py). That
+    holds when ids run monotone along a chain; with ids shuffled along
+    it the jump buys little (measured: a 100-node path needs 31-60
+    rounds, a 200-node path does not converge in 15; pinned as a known
+    defect by an xfail test in tests/test_pipeline_ops.py).
 
     Every round shuffles ids only, never payloads — the formulation
     that survives a 100 TB corpus — and the label frame is
-    ``localCheckpoint``-ed every ``checkpoint_every`` rounds so logical-
+    ``localCheckpoint``-ed every ``CC_CHECKPOINT_EVERY`` rounds so logical-
     plan depth stays O(1) instead of nesting join levels per round.
     ``reliable=True`` is the 100 TB cluster path AS A FLAG (VERDICT r07
     item #7, not a code edit): lineage truncation (and the final label
@@ -166,9 +118,10 @@ def cc_edge_list(
     so it outlives this function regardless) — a long-running service
     calling reliable=True per batch owns the checkpoint root's
     retention: enable the cleaner conf or prune the directory on its
-    own schedule, or the reliable store grows without bound. With max_iter=15 the doubling
-    covers component diameters into the tens of thousands of hops; the
-    residual non-convergence guard exists only for graphs beyond that.
+    own schedule, or the reliable store grows without bound. Within
+    ``CC_MAX_ROUNDS`` the doubling covers component diameters into the
+    tens of thousands of hops; the residual non-convergence guard
+    exists only for graphs beyond that.
 
     ``materialized``: callers that already hand over a stored leaf
     (e.g. :func:`~eurovision_spark.operators.dedup.verified_near_edges`
@@ -188,18 +141,22 @@ def cc_edge_list(
     the labels are already materialized in the persist cache by the
     fixpoint-test action.
 
-    ``loop_partitions``: partition count for the propagation rounds'
-    exchanges; None derives it from the SYMMETRIZED row volume the loop
-    actually shuffles (2x the directed edge count; ~250k id rows per
-    partition, floored at 8 — the measured local sweet spot — and
-    capped at the session's parallelism), so a billion-edge cluster
-    graph gets thousands of partitions instead of a hardcoded constant.
-    The parallelism read is Connect-tolerant (sparkContext raises on
-    Spark Connect; falls back to spark.sql.shuffle.partitions there,
-    consistent with the leaf fence above). ``n_edges_hint``: a caller
-    that already knows the edge volume (or a ceiling on it — the LSH
-    verify's measured candidate count bounds its verified edges)
-    passes it to skip the sizing count action entirely.
+    The propagation rounds' exchanges are sized from the SYMMETRIZED
+    row volume the loop actually shuffles (2x the directed edge count;
+    ~250k id rows per partition, floored at 8 — the measured local
+    sweet spot — and capped at the session's parallelism), so a
+    billion-edge cluster graph gets thousands of partitions instead of
+    a hardcoded constant. The parallelism read is Connect-tolerant
+    (sparkContext raises on Spark Connect; falls back to
+    spark.sql.shuffle.partitions there, consistent with the leaf fence
+    above).
+
+    ``n_edges_hint``: a caller that already knows the edge volume (or
+    a ceiling on it — the LSH verify's candidate count, which
+    :func:`~eurovision_spark.operators.dedup.verified_near_edges`
+    returns beside its edges, bounds the verified edges) passes it to
+    skip the sizing count action, and a hint above ``LOCAL_CC_EDGES``
+    skips the driver path's collect.
 
     CONCURRENCY NOTE (Spark rounds only; the driver path sets no conf
     and takes no ``scoped_conf`` lock): the AQE toggle and
@@ -262,18 +219,16 @@ def cc_edge_list(
             if not materialized:
                 edges.unpersist()
             return labels
-    if not materialized:
-        n_edges = edges.count()
-    elif n_edges_hint is not None:
+    if materialized and n_edges_hint is not None:
         # the caller already measured (or upper-bounded) the edge
-        # volume — e.g. the adaptive verify's candidate count rides
-        # along on verified edges — so the sizing count job is skipped
+        # volume — e.g. the adaptive verify's candidate count, returned
+        # beside the verified edges — so the sizing count job is skipped
         # (each job costs ~0.2s of pure scheduling on the bench box)
         n_edges = n_edges_hint
     else:
-        # a count on a materialized leaf is one cheap metadata-ish job;
+        # one cheap job on the persisted (or materialized) edge list;
         # it sizes the loop's exchanges below
-        n_edges = edges.count() if loop_partitions is None else 0
+        n_edges = edges.count()
     # AQE off for the propagation rounds: adaptive execution
     # materializes EVERY exchange of every round as its own stage-job
     # to re-plan on runtime stats — on an iterative id-only graph the
@@ -292,14 +247,13 @@ def cc_edge_list(
     # edge count (~250k rows/partition), floored at 8 (the measured
     # local sweet spot), capped at defaultParallelism — a billion-edge
     # cluster graph gets thousands of partitions, not a literal 8.
-    if loop_partitions is None:
-        try:
-            max_par = spark.sparkContext.defaultParallelism
-        except Exception:  # pragma: no cover - Spark Connect sessions
-            max_par = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-        # size from what the loop really shuffles: the 2x symmetrized
-        # edge frame (plus same-order label frames)
-        loop_partitions = max(8, min(max_par, (2 * n_edges) // 250_000))
+    try:
+        max_par = spark.sparkContext.defaultParallelism
+    except Exception:  # pragma: no cover - Spark Connect sessions
+        max_par = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
+    # size from what the loop really shuffles: the 2x symmetrized
+    # edge frame (plus same-order label frames)
+    loop_partitions = max(8, min(max_par, (2 * n_edges) // 250_000))
     with scoped_conf(
         spark,
         {
@@ -348,7 +302,7 @@ def cc_edge_list(
             )
 
         converged = False
-        for i in range(max_iter):
+        for i in range(CC_MAX_ROUNDS):
             # two hops per action; the mid-hop label rides along as _mid so
             # the fixpoint test costs nothing extra (measured: ONE-hop
             # first rounds lose — template-generated near-dup clusters have
@@ -368,7 +322,7 @@ def cc_edge_list(
                     "node", "_mid", F.coalesce("_pc", "comp").alias("comp")
                 )
             new_labels = h2.persist()
-            if (i + 1) % checkpoint_every == 0:
+            if (i + 1) % CC_CHECKPOINT_EVERY == 0:
                 # truncate lineage: without this each round nests more join
                 # levels into the logical plan (O(rounds) plan depth,
                 # O(rounds^2) analysis cost, ~10k-line explain output)
@@ -376,8 +330,8 @@ def cc_edge_list(
             # ONE action: count rows this round's hop(s) (or the jump)
             # changed. Zero changes == hop fixpoint (at which point the
             # jump is the identity); type-agnostic, so node ids may be
-            # structs (the any-key reduction uses (group, entry) nodes).
-            # NULL (empty edge list) counts as converged.
+            # any orderable type. NULL (empty edge list) counts as
+            # converged.
             n_changed = new_labels.agg(
                 F.sum(F.when(F.col("_mid") != F.col("comp"), 1).otherwise(0))
             ).collect()[0][0]
@@ -390,8 +344,9 @@ def cc_edge_list(
         edges.unpersist()
     if not converged:
         raise RuntimeError(
-            f"cc_edge_list did not converge in {max_iter} rounds "
-            "(component diameter exceeds ~2^max_iter hops); raise max_iter"
+            f"cc_edge_list did not converge in {CC_MAX_ROUNDS} rounds "
+            "(component diameter exceeds ~2^CC_MAX_ROUNDS hops); raise "
+            "CC_MAX_ROUNDS"
         )
     # hand consumers a LEAF: the label frame is already materialized in
     # cache, but its logical plan still nests every round — consumers
@@ -406,30 +361,11 @@ def cc_edge_list(
 
 def _driver_orderable(dt: T.DataType) -> bool:
     """True when Python orders ``dt``'s collected values exactly as
-    Spark's ``least``/``min`` do: integral ids, binary-collated strings
-    (UTF-8 byte order is code-point order, which is Python's), and
-    structs of those (field-by-field, as Python tuples compare)."""
+    Spark's ``least``/``min`` do: integral ids and binary-collated
+    strings (UTF-8 byte order is code-point order, which is Python's)."""
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return True
-    if isinstance(dt, T.StringType):
-        return dt.collation == "UTF8_BINARY"
-    if isinstance(dt, T.StructType):
-        return bool(dt.fields) and all(_driver_orderable(f.dataType) for f in dt.fields)
-    return False
-
-
-def _py_keys(arr: pa.Array) -> list | None:
-    """Hashable, orderable Python values of a collected id column (a
-    struct becomes a tuple of its fields); None when any id is NULL at
-    any depth, which the driver path leaves to the Spark rounds."""
-    if arr.null_count:
-        return None
-    if pa.types.is_struct(arr.type):
-        cols = [_py_keys(c) for c in arr.flatten()]
-        if any(c is None for c in cols):
-            return None
-        return list(zip(*cols))
-    return arr.to_pylist()
+    return isinstance(dt, T.StringType) and dt.collation == "UTF8_BINARY"
 
 
 def _driver_cc(edges: DataFrame, src: str, dst: str) -> DataFrame | None:
@@ -461,9 +397,9 @@ def _driver_cc(edges: DataFrame, src: str, dst: str) -> DataFrame | None:
     nodes = pa.concat_arrays(
         [pairs.column(0).combine_chunks(), pairs.column(1).combine_chunks()]
     )
-    keys = _py_keys(nodes)
-    if keys is None:
+    if nodes.null_count:
         return None
+    keys = nodes.to_pylist()
     # union-find whose roots are always their set's min id: a union
     # hangs the larger root under the smaller, compression keeps roots
     first: dict = {}
@@ -517,9 +453,9 @@ def cc_bounded_groups_array(
     groups vs ~1 s for this formulation).
 
     Work is O(n^3) per group — fine for the bounded-fanout entity lists
-    this is for (IMP lists: < 10/trial, README.md:27); use
-    :func:`connected_components_any_key` when components can span an
-    unbounded number of rows.
+    this is for (IMP lists: < 10/trial, README.md:27); a graph whose
+    components can span an unbounded number of rows belongs on
+    :func:`cc_edge_list`.
     """
     packed = entries.groupBy(group_col).agg(
         F.array_sort(

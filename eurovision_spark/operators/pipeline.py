@@ -203,14 +203,14 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from eurovision_spark.operators.imp_dedup import cc_edge_list
 
-    edges = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
+    edges, n_pairs = verified_near_edges(None, sets=copies_shingle_sets(spark, sf_dir))
     labels = cc_edge_list(
         edges,
         "doc_id_1",
         "doc_id_2",
         materialized=True,
         leaf=False,
-        n_edges_hint=getattr(edges, "_sg_n_pairs", None),
+        n_edges_hint=n_pairs,
     )
     g = (
         docs_with_copies(spark, sf_dir)

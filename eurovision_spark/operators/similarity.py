@@ -419,7 +419,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared banded-LSH pair generator (dedup.pairs_in_buckets): one
     # bucket shuffle, in-array pair slice; distinct only when >1 band
     # can make the same pair collide twice
-    from eurovision_spark.operators.dedup import pairs_in_buckets
+    from eurovision_spark.operators.dedup import adaptive_verify_join, pairs_in_buckets
 
     pairs = pairs_in_buckets(bands, "vec_id", dedup_pairs=nbands > 1)
     withnorm = vecs.withColumn("nv", l2norm(F.col("v")))
@@ -448,11 +448,14 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(c), "vec_id_2"
         )
     else:
-        # at scale: ship the (id-only) pair list to the vectors, then
-        # one hash exchange on vec_id_2 — vectors shuffle once, never
-        # through the bucket stage
-        verified = a.join(F.broadcast(pairs), "vec_id_1").join(
-            c.hint("shuffle_hash"), "vec_id_2"
+        # at scale: the candidate list grows with n, so it goes through
+        # the counted density valve (dedup.adaptive_verify_join) — the
+        # pair list broadcasts only while the measured count is
+        # broadcast-safe (with or without the vector payload), past it
+        # both verify joins run shuffled-hash. Vectors never flow
+        # through the bucket stage either way
+        verified, _ = adaptive_verify_join(
+            a, pairs, c, k1="vec_id_1", k2="vec_id_2", payload_row_bytes=dim * 8 + 16
         )
     return (
         verified.filter(cos >= NEAR_DUP_THRESHOLD)

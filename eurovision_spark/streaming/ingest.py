@@ -487,12 +487,16 @@ def stream_session_rollup(
     )
 
 
+def _stream_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A parquet file-stream source over ``path``, its schema read from
+    the files already there (a file stream cannot infer one)."""
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+
+
 def _stream_docs(spark: SparkSession, docs_dir: str) -> DataFrame:
     """The documents file-stream source shared by every stateless doc
     twin (one definition of the schema acquisition + n_chars guard)."""
-    schema = spark.read.parquet(docs_dir).schema
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-    return stream.filter(F.col("n_chars") > 0)
+    return _stream_parquet(spark, docs_dir).filter(F.col("n_chars") > 0)
 
 
 def stream_chunk_documents(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -683,7 +687,6 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         incremental_probe,
         index_signatures,
     )
-    from eurovision_spark.operators.imp_dedup import cc_edge_list
     from eurovision_spark.sinks import upsert_parquet
 
     landed_dir = os.path.join(store_dir, "landed")
@@ -820,33 +823,43 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         ["src", "dst"],
         keep="existing",
     )
-    cl = _read_or_empty(clusters_dir, CLUSTERS_DDL)
-    # current label of each matched landed doc (itself if unlabeled)
-    old = dup_pairs.join(
-        cl.select(F.col("doc_id").alias("ex_id"), "cluster_id"), "ex_id", "left"
-    ).select(
-        "inc_id",
-        "ex_id",
-        F.coalesce("cluster_id", F.col("ex_id")).alias("old_cid"),
-    )
-    edges = old.select(F.col("inc_id").alias("a"), F.col("old_cid").alias("b")).unionByName(
+    _merge_clusters(spark, clusters_dir, dup_pairs, "inc_id", "doc_id")
+
+
+def _merge_clusters(
+    spark: SparkSession, clusters_dir: str, pairs: DataFrame, inc: str, key: str
+) -> None:
+    """Merge one batch's verified (``inc``, ``ex_id``) pairs — incoming
+    id, matched landed id — into the ``clusters/`` store of (``key``,
+    cluster_id) rows: each pair links both ends to the landed side's
+    current label (itself if unlabeled), a batch-sized
+    imp_dedup.cc_edge_list merges the touched clusters, their stored
+    members are relabeled and the nodes get rows. Labels are min member
+    ids, so clusters built across batches converge to the batch labels.
+
+    Replay contract: the labels are a function of ``pairs`` and the
+    store alone, so a replayed batch re-derives the same rows and the
+    incoming-wins ``keep="updates"`` upsert changes nothing; ``pairs``
+    must be materialized before the batch's first store commit."""
+    from eurovision_spark.operators.imp_dedup import cc_edge_list
+    from eurovision_spark.sinks import upsert_parquet
+
+    cl = _read_store_or_empty(spark, clusters_dir, f"{key} bigint, cluster_id bigint")
+    old = pairs.join(
+        cl.select(F.col(key).alias("ex_id"), "cluster_id"), "ex_id", "left"
+    ).select(inc, "ex_id", F.coalesce("cluster_id", F.col("ex_id")).alias("old_cid"))
+    edges = old.select(F.col(inc).alias("a"), F.col("old_cid").alias("b")).unionByName(
         old.select(F.col("ex_id").alias("a"), F.col("old_cid").alias("b"))
     )
     labels = cc_edge_list(edges, "a", "b")  # (node, comp): min member id
-    # relabel every existing member of a touched cluster, then add
-    # rows for the nodes themselves (incoming docs + newly-labeled
-    # landed docs). Deterministic under replay: same edges -> same
-    # labels, so incoming-wins upserts are idempotent.
     relabeled = cl.join(
         labels.select(F.col("node").alias("cluster_id"), "comp"), "cluster_id"
-    ).select("doc_id", F.col("comp").alias("cluster_id"))
-    node_rows = labels.select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-    )
-    updates = relabeled.unionByName(node_rows).groupBy("doc_id").agg(
+    ).select(key, F.col("comp").alias("cluster_id"))
+    node_rows = labels.select(F.col("node").alias(key), F.col("comp").alias("cluster_id"))
+    updates = relabeled.unionByName(node_rows).groupBy(key).agg(
         F.min("cluster_id").alias("cluster_id")
     )
-    upsert_parquet(updates, clusters_dir, ["doc_id"], keep="updates")
+    upsert_parquet(updates, clusters_dir, [key], keep="updates")
 
 
 def assign_splits_batch(
@@ -1189,15 +1202,11 @@ def stream_vector_dedup(
     )
     from eurovision_spark.sinks import upsert_parquet
 
-    from eurovision_spark.operators.imp_dedup import cc_edge_list
-
     landed_dir = os.path.join(store_dir, "landed")
     decisions_dir = os.path.join(store_dir, "decisions")
     clusters_dir = os.path.join(store_dir, "clusters")
-    schema = spark.read.parquet(vecs_dir).schema
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(vecs_dir)
+        _stream_parquet(spark, vecs_dir)
         .select("vec_id", as_double(F.col("embedding")).alias("v"))
         .filter(l2norm(F.col("v")) > 0)
     )
@@ -1266,28 +1275,8 @@ def stream_vector_dedup(
         )
         upsert_parquet(survivors, landed_dir, ["vec_id"], keep="existing")
         # --- cluster maintenance: the vector twin of the document path
-        if near_pairs.isEmpty():
-            return
-        cl = _read_store_or_empty(spark, clusters_dir, "vec_id bigint, cluster_id bigint")
-        old = near_pairs.join(
-            cl.select(F.col("vec_id").alias("ex_id"), "cluster_id"), "ex_id", "left"
-        ).select(
-            "vec_id", "ex_id", F.coalesce("cluster_id", F.col("ex_id")).alias("old_cid")
-        )
-        edges = old.select(F.col("vec_id").alias("a"), F.col("old_cid").alias("b")).unionByName(
-            old.select(F.col("ex_id").alias("a"), F.col("old_cid").alias("b"))
-        )
-        labels = cc_edge_list(edges, "a", "b")
-        relabeled = cl.join(
-            labels.select(F.col("node").alias("cluster_id"), "comp"), "cluster_id"
-        ).select("vec_id", F.col("comp").alias("cluster_id"))
-        node_rows = labels.select(
-            F.col("node").alias("vec_id"), F.col("comp").alias("cluster_id")
-        )
-        updates = relabeled.unionByName(node_rows).groupBy("vec_id").agg(
-            F.min("cluster_id").alias("cluster_id")
-        )
-        upsert_parquet(updates, clusters_dir, ["vec_id"], keep="updates")
+        if not near_pairs.isEmpty():
+            _merge_clusters(spark, clusters_dir, near_pairs, "vec_id", "vec_id")
 
     return (
         stream.writeStream.foreachBatch(_process)
@@ -1679,8 +1668,7 @@ def stream_embedding_gate(
     from eurovision_spark.operators.similarity import as_double, l2norm
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(emb_dir).schema)
-        .parquet(emb_dir)
+        _stream_parquet(spark, emb_dir)
         .select(F.col("vec_id").alias("doc_id"), as_double(F.col(vec_col)).alias("_v"))
         .filter(l2norm(F.col("_v")) > 0)
     )
@@ -1859,12 +1847,7 @@ def stream_media_dedup(
     fpindex_dir = os.path.join(store_dir, "media_fpindex")
     decisions_dir = os.path.join(store_dir, "media_decisions")
 
-    schema = spark.read.parquet(media_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(media_dir)
-        .select("doc_id", "content")
-    )
+    stream = _stream_parquet(spark, media_dir).select("doc_id", "content")
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         fps = batch_df.mapInPandas(

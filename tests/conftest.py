@@ -14,7 +14,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from eurovision_spark import get_spark
 
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
 
 

@@ -748,13 +748,13 @@ def cc_path(request, monkeypatch):
 
 def test_cc_edge_list_converges_on_long_chains_and_odd_shapes(spark, cc_path):
     """Pointer doubling makes cc_edge_list O(log diameter): a path graph
-    whose diameter (200) far exceeds max_iter (15) must still converge —
+    whose diameter (200) far exceeds CC_MAX_ROUNDS (15) must still converge —
     the r04 verdict's 'raise and go home' residual. Also pins a mixed
     forest: chain + clique + isolated edge resolve to per-component min
     labels. Run on both paths (the ``cc_path`` fixture)."""
     from eurovision_spark.operators.imp_dedup import cc_edge_list
 
-    n = 201  # path 0-1-2-...-200: diameter 200 >> max_iter 15
+    n = 201  # path 0-1-2-...-200: diameter 200 >> CC_MAX_ROUNDS 15
     chain = [(i, i + 1) for i in range(n - 1)]
     clique = [(a, b) for a in range(1000, 1005) for b in range(a + 1, 1005)]
     extra = [(5000, 6000)]
@@ -792,7 +792,7 @@ def test_cc_edge_list_reliable_checkpoint_path(spark, tmp_path, monkeypatch):
 
     _cc_spark_rounds(monkeypatch)
 
-    # chain long enough to cross the checkpoint_every=3 truncation at
+    # chain long enough to cross the CC_CHECKPOINT_EVERY=3 truncation at
     # least once under pointer doubling, plus a clique
     chain = [(i, i + 1) for i in range(60)]
     clique = [(a, b) for a in range(1000, 1005) for b in range(a + 1, 1005)]
@@ -822,62 +822,6 @@ def test_cc_edge_list_reliable_checkpoint_path(spark, tmp_path, monkeypatch):
     # durable RDD checkpoint data landed under the dir (setCheckpointDir
     # alone creates an empty per-application subdirectory)
     assert any(ck.rglob("rdd-*/part-*")), "checkpoint() wrote no rdd data"
-
-
-def test_connected_components_any_key_star_reduction(spark, cc_path):
-    """The shared-key CC variant is now a star-edge reduction onto
-    cc_edge_list: components must match a brute-force Python union-find
-    over 'shares a non-null key value within the group', cross-group
-    values must NOT connect, isolated entries keep their own label, and
-    a long cross-key chain (diameter 60 > the old per-hop budget)
-    converges via the pointer doubling instead of raising. Run on both
-    cc_edge_list paths: the nodes are (group, entry) structs."""
-    from eurovision_spark.operators.imp_dedup import connected_components_any_key
-
-    # group A: chain e0-e1-e2-... alternating shared keys k1/k2
-    n = 61
-    rows = []
-    for i in range(n):
-        # consecutive entries alternate the key they share: (i, i+1)
-        # share k1 for even i (same i//2) and k2 for odd i
-        rows.append(("A", i, f"a{i // 2}", f"b{(i + 1) // 2}"))
-    # group B reuses THE SAME key values — must stay a separate component
-    rows += [("B", 0, "a0", None), ("B", 1, "a0", None)]
-    # isolated entry: all keys null
-    rows += [("A", 999, None, None)]
-    df = spark.createDataFrame(
-        rows, "grp string, entry bigint, k1 string, k2 string"
-    )
-    got = {
-        (r.grp, r.entry): r.comp
-        for r in connected_components_any_key(df, "grp", "entry", ["k1", "k2"]).collect()
-    }
-
-    # brute-force union-find ground truth
-    parent = {}
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb, key=lambda t: t[1])] = min(ra, rb, key=lambda t: t[1])
-    by_key = {}
-    for grp, e, k1, k2 in rows:
-        for kc, kv in (("k1", k1), ("k2", k2)):
-            if kv is not None:
-                by_key.setdefault((grp, kc, kv), []).append((grp, e))
-    for members in by_key.values():
-        for m in members[1:]:
-            union(members[0], m)
-    want = {(grp, e): find((grp, e))[1] for grp, e, _, _ in rows}
-    assert got == want
-    # the chain really is one component, separate from group B's pair
-    assert len({v for (g, _), v in got.items() if g == "A" and _ != 999}) == 1
-    assert got[("B", 0)] == 0 and got[("B", 1)] == 0
-    assert got[("A", 999)] == 999
 
 
 def _random_forest(rng, ids):
@@ -964,7 +908,7 @@ def test_cc_edge_list_spark_rounds_converge_on_a_chain_of_shuffled_ids(
 ):
     """The Spark rounds' pointer doubling promises O(log diameter)
     rounds, but on a 200-node path whose ids are shuffled along it the
-    jump buys little and the default max_iter raises. Pins the defect:
+    jump buys little and CC_MAX_ROUNDS runs out. Pins the defect:
     this test turns green when the jump is fixed."""
     import random
 

@@ -613,7 +613,7 @@ def test_verified_near_edge_pipeline_stays_equi(spark):
     assert "BroadcastNestedLoopJoin" not in cand_plan
     assert cand_plan.count("Exchange") >= 1  # the one banded bucket shuffle
 
-    edges, sets = near_edges_plan(docs_with_copies(spark, SF_DIR))
+    edges, sets, _ = near_edges_plan(docs_with_copies(spark, SF_DIR))
     plan = _fmt(edges)
     sets.unpersist()
     assert "CartesianProduct" not in plan
@@ -656,7 +656,7 @@ def test_lsh_verify_flips_to_shuffled_hash_when_dense(spark, monkeypatch):
 
     def edge_rows(limit):
         monkeypatch.setattr(dd, "PAIR_BROADCAST_LIMIT", limit)
-        edges, sets = dd.near_edges_plan(docs, threshold=None, with_jaccard=True)
+        edges, sets, _ = dd.near_edges_plan(docs, threshold=None, with_jaccard=True)
         plan = _fmt(edges)
         got = sorted(map(tuple, edges.collect()))
         sets.unpersist()
@@ -1081,7 +1081,7 @@ def test_payload_tier_byte_guard_demotes_wide_rows(spark):
         pairs = dd._lsh_candidate_pairs(sig)
         s1 = sets.select(F2.col("doc_id").alias("doc_id_1"), F2.col("hs").alias("hs1"))
         s2 = sets.select(F2.col("doc_id").alias("doc_id_2"), F2.col("hs").alias("hs2"))
-        out = dd.adaptive_verify_join(
+        out, _ = dd.adaptive_verify_join(
             s1, pairs, s2, payload_row_bytes=payload_row_bytes
         )
         buf = io.StringIO()
@@ -1098,24 +1098,58 @@ def test_payload_tier_byte_guard_demotes_wide_rows(spark):
     assert got_wide == got_payload  # identical results either way
 
 
-def test_pair_count_hint_survives_the_edge_chain(spark):
-    """r08 review finding: the measured candidate count rides the edge
-    frame as a private attribute (_sg_n_pairs) so cc_edge_list can skip
-    its own sizing job — an invisible perf contract: dropping it
-    anywhere in adaptive_verify_join -> near_edges_plan ->
-    verified_near_edges would silently re-pay a count job per query
-    with no behavioral change. Pin that the hint ARRIVES, typed and
-    positive, so a refactor that loses it fails loudly."""
-    from eurovision_spark.operators.dedup import (
-        copies_shingle_sets,
-        verified_near_edges,
-    )
+def test_embedding_near_dup_large_table_verify_uses_the_counted_valve(
+    spark, monkeypatch
+):
+    """Past VEC_BCAST_BYTES embedding_near_dup's candidate pair list
+    grows with n, so its verify goes through dedup.adaptive_verify_join's
+    counted density valve instead of broadcasting the pairs whatever
+    their count. With the vector-table budget and the pair broadcast
+    bound both forced to 0, no join may broadcast, and the rows must
+    equal the default (small-table, double-broadcast) path's."""
+    import eurovision_spark.operators.dedup as dd
+    import eurovision_spark.operators.similarity as sim
 
-    sets = copies_shingle_sets(spark, SF_DIR)
-    edges = verified_near_edges(None, sets=sets)
-    sets.unpersist()
-    hint = getattr(edges, "_sg_n_pairs", None)
-    assert isinstance(hint, int) and hint > 0, hint
+    fn = registry()["embedding_near_dup"].fn
+    want = sorted(map(tuple, fn(spark, SF_DIR).collect()))
+    monkeypatch.setattr(sim, "VEC_BCAST_BYTES", 0)
+    monkeypatch.setattr(dd, "PAIR_BROADCAST_LIMIT", 0)
+    df = fn(spark, SF_DIR)
+    plan = _fmt(df)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "ShuffledHashJoin" in plan, plan
+    assert want and sorted(map(tuple, df.collect())) == want
+
+
+def test_pair_count_hint_survives_the_edge_chain(spark, monkeypatch):
+    """The LSH verify's measured candidate count is returned beside the
+    verified edges (adaptive_verify_join -> near_edges_plan ->
+    verified_near_edges) and every connected-components caller over
+    those edges passes it to cc_edge_list as ``n_edges_hint``, so the CC
+    skips its own sizing job — dropping it anywhere would silently
+    re-pay a count job per query with no behavioral change. Pin that the
+    hint ARRIVES at cc_edge_list, typed and positive, from each caller."""
+    from eurovision_spark.operators import imp_dedup
+    from eurovision_spark.operators.dedup import dedup_decision_frames
+
+    hints = []
+    real = imp_dedup.cc_edge_list
+
+    def spy(*args, **kwargs):
+        hints.append(kwargs.get("n_edges_hint"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(imp_dedup, "cc_edge_list", spy)
+    callers = {
+        "minhash_cluster": registry()["minhash_cluster"].fn,
+        "leakage_safe_split": registry()["leakage_safe_split"].fn,
+        "dedup_decision_frames": dedup_decision_frames,
+    }
+    for name, fn in callers.items():
+        hints.clear()
+        fn(spark, SF_DIR)
+        assert len(hints) == 1, (name, hints)
+        assert isinstance(hints[0], int) and hints[0] > 0, (name, hints)
 
 
 def test_corpus_build_manifest_assembly_moves_ids_only(spark):

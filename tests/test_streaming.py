@@ -772,7 +772,7 @@ def test_stream_cluster_store_matches_batch_minhash_cluster(spark, tmp_path):
     want = {
         r.node: r.comp
         for r in cc_edge_list(
-            verified_near_edges(union), "doc_id_1", "doc_id_2"
+            verified_near_edges(union)[0], "doc_id_1", "doc_id_2"
         ).collect()
     }
     assert got == want, (got, want)
@@ -830,6 +830,7 @@ def test_stream_cluster_store_replay_stable(spark, tmp_path):
         q.processAllAvailable()
         write_wave("w2_replay", [(100, x + " perturbed")])
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 101  # job budget: 2 waves + a replay
     finally:
         q.stop()
 
@@ -1003,6 +1004,7 @@ def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
         # replay the last wave: the store must not change
         write_wave("w3_replay", [(1, [x * 4.0 for x in base])])
         q.processAllAvailable()
+        assert _query_jobs(spark, q) <= 64  # job budget: 3 waves + a replay
     finally:
         q.stop()
 
