@@ -163,10 +163,13 @@ def cc_edge_list(
     shuffle-partition pin are SESSION-GLOBAL confs (Spark has no per-query scope for them);
     both are restored in a ``finally``, but a query planned
     CONCURRENTLY on the same SparkSession during the loop inherits
-    the degraded settings. The engine's own call sites are serialized
-    (foreachBatch batches; single-query batch ops); callers embedding
-    this in a multi-threaded session should serialize around it or
-    use a dedicated session.
+    the degraded settings. The engine's own call sites never overlap
+    it with other work: foreachBatch batches and single-query batch ops
+    run one at a time, and the streaming intakes label their clusters
+    on the batch's own thread BEFORE they start their overlapped store
+    commits (ingest._cluster_updates, sinks._ConcurrentUpserts).
+    Callers embedding this in a multi-threaded session should serialize
+    around it or use a dedicated session.
     """
     if materialized:
         # a leaf plan has no children; anything else re-runs upstream

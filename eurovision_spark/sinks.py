@@ -24,12 +24,16 @@ primitive, :func:`commit_store`:
   commit; it finishes a swap cut between its renames and rolls back
   anything else a crash left. After a commit returns, no ``_stage``,
   ``_next`` or ``_old`` entry remains.
+- Concurrency: distinct stores may commit at the same time
+  (:class:`_ConcurrentUpserts` overlaps a batch's independent commits);
+  each store still has one writer, which the recovery above assumes.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -222,6 +226,52 @@ def upsert_parquet(
     else:
         existing = spark.read.schema(df.schema).parquet(path)
         commit_store(df.unionByName(_anti(existing, df, keys)), path, replace=True)
+
+
+class _ConcurrentUpserts:
+    """Overlap independent keyed-store commits.
+
+    A context manager whose ``commit(df, path, keys, keep)`` starts
+    :func:`upsert_parquet` on a worker thread of its own (one per
+    commit) and returns at once. The worker inherits the local
+    properties (job group, tags) the caller holds at that call; a plain
+    thread would run its jobs in no job group. On exit, it waits for
+    every commit started, then re-raises the first failure (the body's
+    own exception, if any, takes precedence), so a crash leaves a
+    well-defined set of stores committed. The caller keeps the
+    ordering: two commits to one store, or a commit whose ``df`` reads
+    a store another commit writes, must not overlap. Nothing the
+    workers run changes a session conf.
+    """
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.threads: list[threading.Thread] = []
+        self.errors: list[BaseException] = []
+
+    def commit(
+        self, df: DataFrame, path: str, keys: list[str], keep: str = "existing"
+    ) -> None:
+        from pyspark import inheritable_thread_target
+
+        def run() -> None:
+            try:
+                upsert_parquet(df, path, keys, keep)
+            except BaseException as e:  # noqa: BLE001 — re-raised on exit
+                self.errors.append(e)
+
+        t = threading.Thread(target=inheritable_thread_target(self.spark)(run))
+        t.start()
+        self.threads.append(t)
+
+    def __enter__(self) -> "_ConcurrentUpserts":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        for t in self.threads:
+            t.join()
+        if exc_type is None and self.errors:
+            raise self.errors[0]
 
 
 def delete_keys(spark, path: str, key: str, victims: DataFrame) -> None:

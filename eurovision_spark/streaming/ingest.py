@@ -58,19 +58,24 @@ def _latest_tail(tails_root: str, before: int | None = None) -> str | None:
     return os.path.join(tails_root, f"epoch={epochs[-1]}", "tail.txt") if epochs else None
 
 
-def _upsert_tables(tables: dict[str, DataFrame], out_dir: str) -> None:
-    from eurovision_spark.sinks import upsert_parquet
+def _upsert_tables(
+    spark: SparkSession, tables: dict[str, DataFrame], out_dir: str
+) -> None:
+    from eurovision_spark.sinks import _ConcurrentUpserts
 
-    for name, df in tables.items():
-        path = f"{out_dir}/{name}"
-        if name == "trial":
-            # first batch wins per trial id (scan.py:129-132: later
-            # duplicate inserts are dropped) — the keyed MERGE edge
-            upsert_parquet(df, path, ["eudract_id"], keep="existing")
-        else:
-            # child tables are sets of whole rows: the "key" is the
-            # full row, so the same first-wins upsert is a set union
-            upsert_parquet(df.dropDuplicates(), path, df.columns, keep="existing")
+    # four independent first-wins stores, none read by another's commit:
+    # their commits overlap
+    with _ConcurrentUpserts(spark) as ups:
+        for name, df in tables.items():
+            path = f"{out_dir}/{name}"
+            if name == "trial":
+                # first batch wins per trial id (scan.py:129-132: later
+                # duplicate inserts are dropped) — the keyed MERGE edge
+                ups.commit(df, path, ["eudract_id"])
+            else:
+                # child tables are sets of whole rows: the "key" is the
+                # full row, so the same first-wins upsert is a set union
+                ups.commit(df.dropDuplicates(), path, df.columns)
 
 
 def stream_registry_ingest(
@@ -131,7 +136,7 @@ def stream_registry_ingest(
                 return
             head = numbered.filter(F.col("line_no") < last_marker)
             tables = parse_registry_lines(head, caches=caches)
-            _upsert_tables(tables, out_dir)
+            _upsert_tables(spark, tables, out_dir)
         finally:
             # release the batch's persisted intermediates: a long-running
             # stream otherwise pins cached datasets PER micro-batch
@@ -167,7 +172,7 @@ def flush_registry_tail(spark: SparkSession, out_dir: str) -> None:
         tables = parse_registry_lines(
             number_lines(spark.read.text(latest), caches=caches), caches=caches
         )
-        _upsert_tables(tables, out_dir)
+        _upsert_tables(spark, tables, out_dir)
     finally:
         for c in caches:
             c.unpersist()
@@ -595,10 +600,17 @@ def stream_incremental_dedup(
        docs get their labels. Labels are min member ids, so three
        micro-batches building a transitive cluster converge to exactly
        the batch minhash_cluster labels on the union (pinned in
-       tests/test_streaming.py). The edges are fixed before the first
-       store commit, so a batch cut between two of its commits and
-       replayed whole leaves every store as an uncut run would (pinned
-       there too).
+       tests/test_streaming.py).
+
+    Commit order: the edges and the cluster labels are fixed before the
+    first store commit. Then the edges and clusters commits overlap the
+    decisions commit, and landed/index/sigindex overlap each other once
+    decisions has landed (sinks._ConcurrentUpserts; decisions ->
+    survivors is the one dependency). A crash may therefore leave any of
+    those interleavings committed: edges and clusters without decisions,
+    or decisions with any subset of the survivor stores. The batch
+    replayed whole leaves every store as an uncut run would (pinned
+    there too, one cut per commit).
 
     Arrival-order semantics, stated honestly: a near-dup pair split
     across batches keeps the EARLIER-ARRIVED member (the batch twin
@@ -687,7 +699,7 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         incremental_probe,
         index_signatures,
     )
-    from eurovision_spark.sinks import upsert_parquet
+    from eurovision_spark.sinks import _ConcurrentUpserts, upsert_parquet
 
     landed_dir = os.path.join(store_dir, "landed")
     index_dir = os.path.join(store_dir, "index")
@@ -784,65 +796,70 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         )
         .localCheckpoint()  # edge store + CC both read it
     )
-    # decisions FIRST, survivors second — and survivors re-read the
-    # decisions STORE rather than the in-flight plan. Order matters:
-    # the decisions plan lazily scans the index stores, and
-    # committing to them first would change the file listing a
-    # re-planned scan sees, silently re-deciding the batch
-    # against a store that already contains it (every 'new' doc
-    # would then exact-dup itself).
-    upsert_parquet(decisions, decisions_dir, ["doc_id"], keep="existing")
-    new_ids = (
-        _read_or_empty(decisions_dir, DECISIONS_DDL)
-        .filter(F.col("decision") == "new")
-        .select("doc_id")
+    # --- commits: decisions -> {landed, index, sigindex} is the one
+    # dependency; edges and clusters read only dup_pairs and their own
+    # stores, so they overlap the decisions commit. The CC runs first,
+    # on this thread, before any commit is in flight: its Spark rounds
+    # change session confs (imp_dedup.cc_edge_list, CONCURRENCY NOTE).
+    cluster_rows = (
+        None
+        if dup_pairs.isEmpty()
+        else _cluster_updates(spark, clusters_dir, dup_pairs, "inc_id", "doc_id")
     )
-    upsert_parquet(batch.join(new_ids, "doc_id"), landed_dir, ["doc_id"], keep="existing")
-    upsert_parquet(inc_idx.join(new_ids, "doc_id"), index_dir, ["doc_id"], keep="existing")
-    upsert_parquet(
-        inc_bands.join(new_ids, "doc_id"),
-        sigindex_dir,
-        ["doc_id", "band_id"],
-        keep="existing",
-    )
-    # --- cluster maintenance (batch-sized + touched clusters only) ---
-    if dup_pairs.isEmpty():
-        return
-    # persist the VERIFIED edge list (normalized id pairs — tiny rows):
-    # the recrawl refresh re-derives components of touched clusters from
-    # these instead of guessing, so retiring a bridge doc SPLITS its
-    # cluster exactly as a from-scratch intake would (the r06
-    # conservative no-split limit is gone). keep="existing" makes
-    # replays idempotent.
-    upsert_parquet(
-        dup_pairs.select(
-            F.least("inc_id", "ex_id").alias("src"),
-            F.greatest("inc_id", "ex_id").alias("dst"),
-        ).distinct(),
-        edges_dir,
-        ["src", "dst"],
-        keep="existing",
-    )
-    _merge_clusters(spark, clusters_dir, dup_pairs, "inc_id", "doc_id")
+    with _ConcurrentUpserts(spark) as ups:
+        if cluster_rows is not None:
+            # the VERIFIED edge list (normalized id pairs — tiny rows):
+            # the recrawl refresh re-derives components of touched
+            # clusters from these, so retiring a bridge doc SPLITS its
+            # cluster exactly as a from-scratch intake would
+            ups.commit(
+                dup_pairs.select(
+                    F.least("inc_id", "ex_id").alias("src"),
+                    F.greatest("inc_id", "ex_id").alias("dst"),
+                ).distinct(),
+                edges_dir,
+                ["src", "dst"],
+            )
+            ups.commit(cluster_rows, clusters_dir, ["doc_id"], keep="updates")
+        # decisions FIRST, survivors after, and the survivors re-read
+        # the decisions STORE rather than the in-flight plan: new_ids
+        # must be the FIRST run's decisions. A replay of a batch cut
+        # after its index commit probes a store that already holds the
+        # batch, so its own plan decides every survivor an exact dup of
+        # itself and would never land it. (The decisions plan reads only
+        # checkpointed leaves, so no commit here can re-plan it.)
+        upsert_parquet(decisions, decisions_dir, ["doc_id"], keep="existing")
+        new_ids = (
+            _read_or_empty(decisions_dir, DECISIONS_DDL)
+            .filter(F.col("decision") == "new")
+            .select("doc_id")
+        )
+        ups.commit(batch.join(new_ids, "doc_id"), landed_dir, ["doc_id"])
+        ups.commit(inc_idx.join(new_ids, "doc_id"), index_dir, ["doc_id"])
+        ups.commit(
+            inc_bands.join(new_ids, "doc_id"), sigindex_dir, ["doc_id", "band_id"]
+        )
 
 
-def _merge_clusters(
+def _cluster_updates(
     spark: SparkSession, clusters_dir: str, pairs: DataFrame, inc: str, key: str
-) -> None:
-    """Merge one batch's verified (``inc``, ``ex_id``) pairs — incoming
-    id, matched landed id — into the ``clusters/`` store of (``key``,
-    cluster_id) rows: each pair links both ends to the landed side's
-    current label (itself if unlabeled), a batch-sized
-    imp_dedup.cc_edge_list merges the touched clusters, their stored
-    members are relabeled and the nodes get rows. Labels are min member
-    ids, so clusters built across batches converge to the batch labels.
+) -> DataFrame:
+    """The ``clusters/`` store rows one batch's verified (``inc``,
+    ``ex_id``) pairs — incoming id, matched landed id — change, as
+    (``key``, cluster_id) rows for a ``keep="updates"`` upsert: each
+    pair links both ends to the landed side's current label (itself if
+    unlabeled), a batch-sized imp_dedup.cc_edge_list merges the touched
+    clusters (run here, eagerly), their stored members are relabeled and
+    the nodes get rows. Labels are min member ids, so clusters built
+    across batches converge to the batch labels.
 
     Replay contract: the labels are a function of ``pairs`` and the
     store alone, so a replayed batch re-derives the same rows and the
-    incoming-wins ``keep="updates"`` upsert changes nothing; ``pairs``
-    must be materialized before the batch's first store commit."""
+    incoming-wins upsert changes nothing, also when the first run's
+    clusters commit landed and another of its commits did not;
+    ``pairs`` must be materialized before the batch's first store
+    commit."""
     from eurovision_spark.operators.imp_dedup import cc_edge_list
-    from eurovision_spark.sinks import upsert_parquet
 
     cl = _read_store_or_empty(spark, clusters_dir, f"{key} bigint, cluster_id bigint")
     old = pairs.join(
@@ -856,10 +873,9 @@ def _merge_clusters(
         labels.select(F.col("node").alias("cluster_id"), "comp"), "cluster_id"
     ).select(key, F.col("comp").alias("cluster_id"))
     node_rows = labels.select(F.col("node").alias(key), F.col("comp").alias("cluster_id"))
-    updates = relabeled.unionByName(node_rows).groupBy(key).agg(
+    return relabeled.unionByName(node_rows).groupBy(key).agg(
         F.min("cluster_id").alias("cluster_id")
     )
-    upsert_parquet(updates, clusters_dir, [key], keep="updates")
 
 
 def assign_splits_batch(
@@ -1200,7 +1216,7 @@ def stream_vector_dedup(
         dot,
         l2norm,
     )
-    from eurovision_spark.sinks import upsert_parquet
+    from eurovision_spark.sinks import _ConcurrentUpserts, upsert_parquet
 
     landed_dir = os.path.join(store_dir, "landed")
     decisions_dir = os.path.join(store_dir, "decisions")
@@ -1260,23 +1276,28 @@ def stream_vector_dedup(
                 F.col("matched_id").cast("bigint"),
             )
         )
-        # decisions first, survivors from the decisions STORE — same
-        # ordering constraint as stream_incremental_dedup (rewriting
-        # landed first would invalidate the in-flight plan's file
-        # listing and re-decide the batch against itself)
-        upsert_parquet(decisions, decisions_dir, ["vec_id"], keep="existing")
-        survivors = batch.select("vec_id", "v", "nv", "bucket").join(
-            _read_store_or_empty(
-                spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
-            )
-            .filter(F.col("decision") == "new")
-            .select("vec_id"),
-            "vec_id",
+        # the clusters commit reads only near_pairs and its own store, so
+        # it overlaps decisions -> landed; the CC runs before it starts,
+        # as in intake_batch. Decisions first, survivors from the
+        # decisions STORE — the same replay rule as intake_batch
+        cluster_rows = (
+            None
+            if near_pairs.isEmpty()
+            else _cluster_updates(spark, clusters_dir, near_pairs, "vec_id", "vec_id")
         )
-        upsert_parquet(survivors, landed_dir, ["vec_id"], keep="existing")
-        # --- cluster maintenance: the vector twin of the document path
-        if not near_pairs.isEmpty():
-            _merge_clusters(spark, clusters_dir, near_pairs, "vec_id", "vec_id")
+        with _ConcurrentUpserts(spark) as ups:
+            if cluster_rows is not None:
+                ups.commit(cluster_rows, clusters_dir, ["vec_id"], keep="updates")
+            upsert_parquet(decisions, decisions_dir, ["vec_id"], keep="existing")
+            survivors = batch.select("vec_id", "v", "nv", "bucket").join(
+                _read_store_or_empty(
+                    spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
+                )
+                .filter(F.col("decision") == "new")
+                .select("vec_id"),
+                "vec_id",
+            )
+            upsert_parquet(survivors, landed_dir, ["vec_id"], keep="existing")
 
     return (
         stream.writeStream.foreachBatch(_process)

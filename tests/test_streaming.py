@@ -929,47 +929,122 @@ def _cut_once_at(monkeypatch, store_name: str) -> None:
     monkeypatch.setattr(sinks, "upsert_parquet", cut)
 
 
-@pytest.mark.parametrize("cut_at", ["landed", "edges", "clusters"])
-def test_intake_batch_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
-    spark, tmp_path, monkeypatch, cut_at
-):
-    """At-least-once recovery: a batch whose run dies after its decisions
-    commit is re-run whole. Every doc of it then has a decision, but its
-    matches to docs landed by the earlier batch must still be written:
-    all six stores must equal those of a run that was never cut."""
+_INTAKE_X = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+_INTAKE_FAR = "one two three four five six seven eight nine ten eleven twelve"
+_INTAKE_WAVES = [
+    [(1, _INTAKE_X), (3, _INTAKE_FAR)],
+    # near copies of both landed docs, one of them sent twice
+    [
+        (2, _INTAKE_X + " perturbed"),
+        (4, _INTAKE_FAR + " perturbed"),
+        (5, _INTAKE_X + " perturbed"),
+    ],
+]
+_INTAKE_STORES = ("landed", "index", "sigindex", "decisions", "clusters", "edges")
+
+
+def _intake_run(spark, store: str, monkeypatch=None, cut_at=None) -> dict[str, list]:
+    """Two intake waves into ``store``; with ``cut_at``, the second wave's
+    first run is cut before its commit into that store and the wave is
+    re-run whole (at-least-once recovery). Returns every store's rows."""
     import os
 
     from eurovision_spark.streaming.ingest import intake_batch
 
-    x = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    far = "one two three four five six seven eight nine ten eleven twelve"
-    ddl = "doc_id bigint, text string"
-    waves = [
-        [(1, x), (3, far)],
-        # near copies of both landed docs, one of them sent twice
-        [(2, x + " perturbed"), (4, far + " perturbed"), (5, x + " perturbed")],
-    ]
-    stores = ("landed", "index", "sigindex", "decisions", "clusters", "edges")
+    for i, wave in enumerate(_INTAKE_WAVES):
+        batch = spark.createDataFrame(wave, "doc_id bigint, text string")
+        if cut_at and i == 1:
+            _cut_once_at(monkeypatch, cut_at)
+            with pytest.raises(RuntimeError, match="cut before"):
+                intake_batch(spark, store, batch)
+        intake_batch(spark, store, batch)
+    return {
+        name: sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(store, name)).collect()
+        )
+        for name in _INTAKE_STORES
+    }
 
-    def run(store: str, cut: bool) -> dict[str, list]:
-        for i, wave in enumerate(waves):
-            batch = spark.createDataFrame(wave, ddl)
-            if cut and i == 1:
-                _cut_once_at(monkeypatch, cut_at)
-                with pytest.raises(RuntimeError, match="cut before"):
-                    intake_batch(spark, store, batch)
-            intake_batch(spark, store, batch)
-        return {
-            name: sorted(
-                tuple(r) for r in spark.read.parquet(os.path.join(store, name)).collect()
-            )
-            for name in stores
-        }
 
-    clean = run(str(tmp_path / "clean"), cut=False)
+@pytest.fixture(scope="module")
+def intake_clean(spark, tmp_path_factory):
+    """The uncut two-wave intake, run once for every cut test, under a
+    job group: (stores, the jobs that ran in no job group meanwhile)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("intake-clean", "intake-clean")
+    try:
+        stores = _intake_run(spark, str(tmp_path_factory.mktemp("intake") / "clean"))
+    finally:
+        for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{prop}", None)
+    assert tracker.getJobIdsForGroup("intake-clean")
+    return stores, set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_intake_batch_under_a_job_group_runs_no_job_outside_it(intake_clean):
+    """The overlapped store commits run on worker threads; each must
+    inherit the caller's job group (streaming counts a query's jobs by
+    its runId group), so no job of the run lands in no group."""
+    _, escaped = intake_clean
+    assert escaped == set()
+
+
+@pytest.mark.parametrize("cut_at", list(_INTAKE_STORES))
+def test_intake_batch_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
+    spark, tmp_path, monkeypatch, cut_at, intake_clean
+):
+    """At-least-once recovery: a batch whose run dies after its decisions
+    commit is re-run whole. Every doc of it then has a decision, but its
+    matches to docs landed by the earlier batch must still be written:
+    all six stores must equal those of a run that was never cut. The
+    edges and clusters commits overlap the decisions commit, so a run
+    cut AT decisions leaves them landed with no decision and no survivor
+    written; its replay must equal a clean run too."""
+    clean = intake_clean[0]
     assert clean["edges"] == [(1, 2), (2, 5), (3, 4)]
     assert clean["clusters"] == [(1, 1), (2, 1), (3, 3), (4, 3), (5, 1)]
-    assert run(str(tmp_path / "cut"), cut=True) == clean
+    assert _intake_run(spark, str(tmp_path / "cut"), monkeypatch, cut_at) == clean
+
+
+def test_intake_with_spark_round_cc_equals_driver_cc_and_sets_no_conf_mid_commit(
+    spark, tmp_path, monkeypatch, intake_clean
+):
+    """With the driver labeling switched off, the cluster labels come from
+    cc_edge_list's Spark rounds, which change session confs: the stores
+    must equal the default run's, and no conf change may be held while
+    a batch's overlapped commits are open."""
+    from contextlib import contextmanager
+
+    from eurovision_spark import sinks
+    from eurovision_spark.operators import imp_dedup
+
+    real_conf, real_pool = imp_dedup.scoped_conf, sinks._ConcurrentUpserts
+    events: list[str] = []
+
+    @contextmanager
+    def conf(spark, confs):
+        events.append("conf")
+        with real_conf(spark, confs) as prev:
+            yield prev
+
+    @contextmanager
+    def pool(spark):
+        events.append("open")
+        with real_pool(spark) as ups:
+            yield ups
+        events.append("close")
+
+    monkeypatch.setattr(imp_dedup, "LOCAL_CC_EDGES", -1)
+    monkeypatch.setattr(imp_dedup, "scoped_conf", conf)
+    monkeypatch.setattr(sinks, "_ConcurrentUpserts", pool)
+    assert _intake_run(spark, str(tmp_path / "rounds")) == intake_clean[0]
+    assert "conf" in events, events
+    depth = 0
+    for e in events:
+        depth += {"open": 1, "close": -1}.get(e, 0)
+        assert not (e == "conf" and depth), events
 
 
 def test_stream_vector_cluster_store_transitive_with_relabel(spark, tmp_path):
@@ -1109,15 +1184,11 @@ def test_vector_wave_resending_a_landed_vector_keeps_a_fresh_near_copys_match(
     assert rows("clusters") == [(1, 1), (2, 1)]
 
 
-@pytest.mark.parametrize("cut_at", ["landed", "clusters"])
-def test_vector_wave_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
-    spark, tmp_path, monkeypatch, cut_at
-):
-    """Vector twin of the intake recovery test: a wave whose run dies
-    after its decisions commit fails the query; a restart from the same
-    checkpoint re-runs the wave, and its matches to vectors landed by the
-    earlier wave must still be written, so every store equals that of a
-    run that was never cut."""
+def _vector_run(spark, root, monkeypatch=None, cut_at=None) -> dict[str, list]:
+    """Two vector waves streamed into a store under ``root``; with
+    ``cut_at``, the second wave's first run is cut before its commit
+    into that store, which fails the query, and a restart from the same
+    checkpoint re-runs the wave. Returns every store's rows."""
     import shutil
 
     from pyspark.errors import StreamingQueryException
@@ -1130,40 +1201,54 @@ def test_vector_wave_cut_after_its_decisions_commit_then_replayed_equals_clean_r
         [(1, va), (3, vb)],
         [(2, [x * 2.0 for x in va]), (4, [x * 3.0 for x in vb])],
     ]
-    stores = ("landed", "decisions", "clusters")
-
-    def run(tag: str, cut: bool) -> dict[str, list]:
-        vecs_dir = tmp_path / tag / "vecs_in"
-        vecs_dir.mkdir(parents=True)
-        store = tmp_path / tag / "store"
-        ck = str(tmp_path / tag / "ck")
-        for i, wave in enumerate(waves):
-            out = tmp_path / tag / f"w{i}"
-            spark.createDataFrame(
-                wave, "vec_id bigint, embedding array<double>"
-            ).coalesce(1).write.parquet(str(out))
-            shutil.copy(next(out.glob("part-*.parquet")), vecs_dir / f"w{i}.parquet")
-            if cut and i == 1:
-                _cut_once_at(monkeypatch, cut_at)
-                q = stream_vector_dedup(spark, str(vecs_dir), str(store), ck)
-                try:
-                    with pytest.raises(StreamingQueryException, match="cut before"):
-                        q.processAllAvailable()
-                finally:
-                    q.stop()
+    vecs_dir = root / "vecs_in"
+    vecs_dir.mkdir(parents=True)
+    store = root / "store"
+    ck = str(root / "ck")
+    for i, wave in enumerate(waves):
+        out = root / f"w{i}"
+        spark.createDataFrame(
+            wave, "vec_id bigint, embedding array<double>"
+        ).coalesce(1).write.parquet(str(out))
+        shutil.copy(next(out.glob("part-*.parquet")), vecs_dir / f"w{i}.parquet")
+        if cut_at and i == 1:
+            _cut_once_at(monkeypatch, cut_at)
             q = stream_vector_dedup(spark, str(vecs_dir), str(store), ck)
             try:
-                q.processAllAvailable()
+                with pytest.raises(StreamingQueryException, match="cut before"):
+                    q.processAllAvailable()
             finally:
                 q.stop()
-        return {
-            name: sorted(tuple(r) for r in spark.read.parquet(str(store / name)).collect())
-            for name in stores
-        }
+        q = stream_vector_dedup(spark, str(vecs_dir), str(store), ck)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return {
+        name: sorted(tuple(r) for r in spark.read.parquet(str(store / name)).collect())
+        for name in ("landed", "decisions", "clusters")
+    }
 
-    clean = run("clean", cut=False)
-    assert clean["clusters"] == [(1, 1), (2, 1), (3, 3), (4, 3)]
-    assert run("cut", cut=True) == clean
+
+@pytest.fixture(scope="module")
+def vector_clean(spark, tmp_path_factory):
+    """The uncut two-wave vector intake, run once for every cut test."""
+    return _vector_run(spark, tmp_path_factory.mktemp("vector") / "clean")
+
+
+@pytest.mark.parametrize("cut_at", ["decisions", "landed", "clusters"])
+def test_vector_wave_cut_after_its_decisions_commit_then_replayed_equals_clean_run(
+    spark, tmp_path, monkeypatch, cut_at, vector_clean
+):
+    """Vector twin of the intake recovery test: a wave whose run dies
+    after its decisions commit fails the query; a restart from the same
+    checkpoint re-runs the wave, and its matches to vectors landed by the
+    earlier wave must still be written, so every store equals that of a
+    run that was never cut. The clusters commit overlaps the decisions
+    commit, so a wave cut AT decisions leaves its cluster rows landed
+    with no decision; the restarted wave must equal a clean run too."""
+    assert vector_clean["clusters"] == [(1, 1), (2, 1), (3, 3), (4, 3)]
+    assert _vector_run(spark, tmp_path / "cut", monkeypatch, cut_at) == vector_clean
 
 
 def test_stream_quality_gate_equals_batch_classifier(spark, sf_dir, tmp_path):
