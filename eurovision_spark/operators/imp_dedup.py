@@ -165,9 +165,9 @@ def cc_edge_list(
     CONCURRENTLY on the same SparkSession during the loop inherits
     the degraded settings. The engine's own call sites never overlap
     it with other work: foreachBatch batches and single-query batch ops
-    run one at a time, and the streaming intakes label their clusters
-    on the batch's own thread BEFORE they start their overlapped store
-    commits (ingest._cluster_updates, sinks._ConcurrentUpserts).
+    run one at a time, and intake_batch labels its clusters on the
+    batch's own thread BEFORE it starts its overlapped store commits
+    (ingest._cluster_updates, sinks._ConcurrentUpserts).
     Callers embedding this in a multi-threaded session should serialize
     around it or use a dedicated session.
     """

@@ -244,8 +244,7 @@ class _ConcurrentUpserts:
     workers run changes a session conf.
     """
 
-    def __init__(self, spark) -> None:
-        self.spark = spark
+    def __init__(self) -> None:
         self.threads: list[threading.Thread] = []
         self.errors: list[BaseException] = []
 
@@ -260,7 +259,7 @@ class _ConcurrentUpserts:
             except BaseException as e:  # noqa: BLE001 — re-raised on exit
                 self.errors.append(e)
 
-        t = threading.Thread(target=inheritable_thread_target(self.spark)(run))
+        t = threading.Thread(target=inheritable_thread_target(df.sparkSession)(run))
         t.start()
         self.threads.append(t)
 

@@ -58,24 +58,19 @@ def _latest_tail(tails_root: str, before: int | None = None) -> str | None:
     return os.path.join(tails_root, f"epoch={epochs[-1]}", "tail.txt") if epochs else None
 
 
-def _upsert_tables(
-    spark: SparkSession, tables: dict[str, DataFrame], out_dir: str
-) -> None:
-    from eurovision_spark.sinks import _ConcurrentUpserts
+def _upsert_tables(tables: dict[str, DataFrame], out_dir: str) -> None:
+    from eurovision_spark.sinks import upsert_parquet
 
-    # four independent first-wins stores, none read by another's commit:
-    # their commits overlap
-    with _ConcurrentUpserts(spark) as ups:
-        for name, df in tables.items():
-            path = f"{out_dir}/{name}"
-            if name == "trial":
-                # first batch wins per trial id (scan.py:129-132: later
-                # duplicate inserts are dropped) — the keyed MERGE edge
-                ups.commit(df, path, ["eudract_id"])
-            else:
-                # child tables are sets of whole rows: the "key" is the
-                # full row, so the same first-wins upsert is a set union
-                ups.commit(df.dropDuplicates(), path, df.columns)
+    for name, df in tables.items():
+        path = f"{out_dir}/{name}"
+        if name == "trial":
+            # first batch wins per trial id (scan.py:129-132: later
+            # duplicate inserts are dropped) — the keyed MERGE edge
+            upsert_parquet(df, path, ["eudract_id"], keep="existing")
+        else:
+            # child tables are sets of whole rows: the "key" is the
+            # full row, so the same first-wins upsert is a set union
+            upsert_parquet(df.dropDuplicates(), path, df.columns, keep="existing")
 
 
 def stream_registry_ingest(
@@ -136,7 +131,7 @@ def stream_registry_ingest(
                 return
             head = numbered.filter(F.col("line_no") < last_marker)
             tables = parse_registry_lines(head, caches=caches)
-            _upsert_tables(spark, tables, out_dir)
+            _upsert_tables(tables, out_dir)
         finally:
             # release the batch's persisted intermediates: a long-running
             # stream otherwise pins cached datasets PER micro-batch
@@ -172,7 +167,7 @@ def flush_registry_tail(spark: SparkSession, out_dir: str) -> None:
         tables = parse_registry_lines(
             number_lines(spark.read.text(latest), caches=caches), caches=caches
         )
-        _upsert_tables(spark, tables, out_dir)
+        _upsert_tables(tables, out_dir)
     finally:
         for c in caches:
             c.unpersist()
@@ -606,11 +601,11 @@ def stream_incremental_dedup(
     first store commit. Then the edges and clusters commits overlap the
     decisions commit, and landed/index/sigindex overlap each other once
     decisions has landed (sinks._ConcurrentUpserts; decisions ->
-    survivors is the one dependency). A crash may therefore leave any of
-    those interleavings committed: edges and clusters without decisions,
-    or decisions with any subset of the survivor stores. The batch
-    replayed whole leaves every store as an uncut run would (pinned
-    there too, one cut per commit).
+    survivors is the one dependency). A crash may therefore leave edges
+    and clusters committed without decisions, or decisions with any
+    subset of the other five stores. The batch replayed whole leaves
+    every store as an uncut run would (pinned there too for a failure at
+    each single commit, and for decisions committed alone).
 
     Arrival-order semantics, stated honestly: a near-dup pair split
     across batches keeps the EARLIER-ARRIVED member (the batch twin
@@ -806,7 +801,7 @@ def intake_batch(spark: SparkSession, store_dir: str, batch_df: DataFrame) -> No
         if dup_pairs.isEmpty()
         else _cluster_updates(spark, clusters_dir, dup_pairs, "inc_id", "doc_id")
     )
-    with _ConcurrentUpserts(spark) as ups:
+    with _ConcurrentUpserts() as ups:
         if cluster_rows is not None:
             # the VERIFIED edge list (normalized id pairs — tiny rows):
             # the recrawl refresh re-derives components of touched
@@ -1216,7 +1211,7 @@ def stream_vector_dedup(
         dot,
         l2norm,
     )
-    from eurovision_spark.sinks import _ConcurrentUpserts, upsert_parquet
+    from eurovision_spark.sinks import upsert_parquet
 
     landed_dir = os.path.join(store_dir, "landed")
     decisions_dir = os.path.join(store_dir, "decisions")
@@ -1276,28 +1271,26 @@ def stream_vector_dedup(
                 F.col("matched_id").cast("bigint"),
             )
         )
-        # the clusters commit reads only near_pairs and its own store, so
-        # it overlaps decisions -> landed; the CC runs before it starts,
-        # as in intake_batch. Decisions first, survivors from the
-        # decisions STORE — the same replay rule as intake_batch
-        cluster_rows = (
-            None
-            if near_pairs.isEmpty()
-            else _cluster_updates(spark, clusters_dir, near_pairs, "vec_id", "vec_id")
-        )
-        with _ConcurrentUpserts(spark) as ups:
-            if cluster_rows is not None:
-                ups.commit(cluster_rows, clusters_dir, ["vec_id"], keep="updates")
-            upsert_parquet(decisions, decisions_dir, ["vec_id"], keep="existing")
-            survivors = batch.select("vec_id", "v", "nv", "bucket").join(
-                _read_store_or_empty(
-                    spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
-                )
-                .filter(F.col("decision") == "new")
-                .select("vec_id"),
-                "vec_id",
+        # decisions first, survivors from the decisions STORE — the
+        # same replay rule as intake_batch
+        upsert_parquet(decisions, decisions_dir, ["vec_id"], keep="existing")
+        survivors = batch.select("vec_id", "v", "nv", "bucket").join(
+            _read_store_or_empty(
+                spark, decisions_dir, "vec_id bigint, decision string, matched_id bigint"
             )
-            upsert_parquet(survivors, landed_dir, ["vec_id"], keep="existing")
+            .filter(F.col("decision") == "new")
+            .select("vec_id"),
+            "vec_id",
+        )
+        upsert_parquet(survivors, landed_dir, ["vec_id"], keep="existing")
+        # --- cluster maintenance: the vector twin of the document path
+        if not near_pairs.isEmpty():
+            upsert_parquet(
+                _cluster_updates(spark, clusters_dir, near_pairs, "vec_id", "vec_id"),
+                clusters_dir,
+                ["vec_id"],
+                keep="updates",
+            )
 
     return (
         stream.writeStream.foreachBatch(_process)
