@@ -150,9 +150,11 @@ def main() -> None:
 
     from eurovision_spark import get_spark
     from eurovision_spark.catalog import registry
+    from eurovision_spark.obs import Probe, noop
 
     spark = get_spark("bench")
     specs = registry()
+    probe = Probe(spark.sparkContext)
 
     # warm up the JVM/codegen path outside the measured window (guarded:
     # a warm-up failure must not erase the whole round's bench signal)
@@ -168,16 +170,11 @@ def main() -> None:
     # -10% suite improvement into 22 false per-query regression flags.
     # Three additive signals make the next comparison burst-evident:
     # (a) 1-min loadavg before/after the pass (detail line; the "after"
-    # reading includes our own task load, so the floor probes below are
-    # the cleaner signal), (b) the 1-task scheduling-floor probe
-    # re-measured BEFORE the pass and periodically DURING it (an
-    # inflated floor = the burst is live right now), and (c) a
-    # load_suspect re-time: when a query's reps disagree >=2x AND a
-    # floor probe taken at that moment reads >2.5x the session's quiet
-    # floor, the burst likely ate a rep — take ONE more timed rep
-    # (still min-of-N, nothing cached) and record the query with
-    # [probe, min before the re-time, min after] in the detail line's
-    # load_suspect map.
+    # reading includes our own task load, so the floor probes are the
+    # cleaner signal), (b) the floor probe re-measured BEFORE the pass
+    # and periodically DURING it (an inflated floor = the burst is live
+    # right now), and (c) the load_suspect re-time of obs.Probe.time,
+    # recorded in the detail line's load_suspect map.
     def _getload() -> float | None:
         try:
             return round(os.getloadavg()[0], 2)
@@ -185,34 +182,17 @@ def main() -> None:
             return None
 
     load1_before = _getload()
-    sc = spark.sparkContext
-    floor_probes: list[float] = []
-
-    def _floor_probe(n: int = 1) -> float:
-        best = None
-        for _ in range(n):
-            t0 = time.time()
-            sc.parallelize([0], 1).count()
-            v = round(time.time() - t0, 3)
-            floor_probes.append(v)
-            best = v if best is None else min(best, v)
-        return best
-
     try:
-        # one discarded warmup first: the very first parallelize().count()
-        # of a session pays one-time codegen/scheduler setup (~1.3s
-        # measured) that would poison the probe list
-        sc.parallelize([0], 1).count()
-        floor_init = _floor_probe(5)
+        probe.floor(5)
     except Exception:  # noqa: BLE001 — instrumentation never kills the bench
-        floor_init = None
+        pass
     load_suspect: dict[str, list[float]] = {}
 
-    # Two passes per query: the first (cold) pays Catalyst analysis +
-    # whole-stage-codegen compilation — a per-plan constant that
-    # amortizes to nothing over a 100 TB run; the second (warm) is the
-    # steady-state engine time that actually scales with data. Both are
-    # reported; "value" is the warm total.
+    # Cold and warm per query (obs.Probe.time): the cold rep pays
+    # Catalyst analysis + codegen, a per-plan constant that amortizes to
+    # nothing over a 100 TB run; warm is the steady-state engine time
+    # that actually scales with data. Both are reported; "value" is the
+    # warm total.
     # Fault isolation: one broken query must not erase the performance
     # signal for the other 20 (round 3 lost the entire bench to a single
     # AnalysisException). Each query is try/except'd; failures land in
@@ -225,92 +205,39 @@ def main() -> None:
         # part of the pass shows up as an inflated probe in the detail
         # line's floor_probes list even when no single query trips the
         # suspect path (costs ~0.13s x 2 over the whole pass)
-        if i and i % 30 == 0 and floor_init is not None:
+        if i and i % 30 == 0:
             try:
-                _floor_probe(1)
+                probe.floor()
             except Exception:  # noqa: BLE001
                 pass
         fn = specs[name].fn
         try:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold[name] = round(time.time() - t0, 3)
-            # steady state = best of two post-compilation runs (single runs
-            # swing ~20% on a shared box; min is the standard steady-state
-            # estimator and stays honest: nothing is cached between runs).
-            # Load robustness (r09): this box takes BURSTY external load
-            # — when the two runs disagree by >30% the burst likely ate
-            # one of them, so take a third and keep the min (bounded
-            # cost: only unstable queries pay it).
-            runs = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            if max(runs) > 1.3 * min(runs):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            # load_suspect re-time (r11): reps still disagreeing >=2x is
-            # burst-shaped; confirm with a floor probe taken NOW and, if
-            # the floor is inflated, pay one more rep so the burst can't
-            # own the min. Purely additive — every rep is the same
-            # noop-sink build, min-of-N stands.
-            if max(runs) > 2.0 * min(runs) and floor_init is not None:
-                try:
-                    probe = _floor_probe(1)
-                    # threshold off the BEST floor seen this session, not
-                    # the pre-pass value — a pass that STARTS loaded would
-                    # otherwise inflate its own burst threshold
-                    if probe > 2.5 * min(floor_probes):
-                        # [probe, min before, min after]: the re-timed min
-                        # has one more rep than its neighbours', so the
-                        # entry keeps the same-rep-count number beside it
-                        before = round(min(runs), 3)
-                        load_suspect[name] = [probe, before, before]
-                        t0 = time.time()
-                        fn(spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        runs.append(time.time() - t0)
-                        load_suspect[name][2] = round(min(runs), 3)
-                except Exception:  # noqa: BLE001
-                    pass
-            warm[name] = round(min(runs), 3)
+            t = probe.time(lambda: fn(spark, sf_dir))
+            cold[name], warm[name] = t.cold, t.warm
+            if t.suspect:
+                load_suspect[name] = t.suspect
         except Exception as exc:  # noqa: BLE001 — report, keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            # keep cold_total and the warm total over the SAME query set
-            cold.pop(name, None)
 
     # Scheduling-floor instrumentation (r08 judge item #7): the warm
     # numbers of job-heavy queries are bounded below by per-job
     # scheduling overhead, not compute — carry the measurement IN the
     # artifact so the adjudication (SCALING.md's "warm min within 1.5x
-    # of the jobs x floor bound") never has to be re-derived. The floor
-    # probe is a 1-partition no-compute job; the heaviest warm query is
-    # re-run once inside a job group to count its Spark jobs.
+    # of the jobs x floor bound") never has to be re-derived. The
+    # heaviest warm query is re-run once to count its Spark jobs.
     noop_floor = None
     heavy = None
     try:
-        # post-pass probe as before; floor_sec is now the min over EVERY
-        # probe taken this session (pre-pass 5 + mid-pass + suspect +
-        # these 5) — the same quantity (the box's quiet scheduling
-        # floor), measured at more moments so a loaded window can't
-        # masquerade as the floor
-        _floor_probe(5)
-        noop_floor = round(min(floor_probes), 3)
+        # floor_sec is the min over EVERY probe taken this session
+        # (pre-pass 5 + mid-pass + suspect + these 5): the box's quiet
+        # scheduling floor, measured at more moments so a loaded window
+        # can't masquerade as the floor
+        noop_floor = probe.floor(5)
         if warm:
             heavy_name = max(warm, key=warm.get)
-            sc.setJobGroup("sg-heavy-probe", "job count for heaviest query")
-            try:
-                t0 = time.time()
-                specs[heavy_name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                heavy_sec = round(time.time() - t0, 3)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs = len(sc.statusTracker().getJobIdsForGroup("sg-heavy-probe"))
+            t0 = time.time()
+            jobs = probe.jobs(lambda: specs[heavy_name].fn(spark, sf_dir))
+            heavy_sec = round(time.time() - t0, 3)
             # rerun_sec stays in the DETAIL line; the contract line
             # carries only floor + jobs + the derived bound (width budget)
             heavy = {
@@ -347,7 +274,7 @@ def main() -> None:
             spark.catalog.clearCache()
             t0 = time.time()
             for df in parse_registry(spark, fixture).values():
-                df.write.format("noop").mode("overwrite").save()
+                noop(df)
             parse_runs.append(time.time() - t0)
         parse_sec = round(min(parse_runs), 3)
     except Exception as exc:  # noqa: BLE001
@@ -363,7 +290,7 @@ def main() -> None:
         noop_floor,
         heavy,
         load1=[load1_before, _getload()],
-        floor_probes=floor_probes,
+        floor_probes=probe.probes,
         load_suspect=load_suspect,
     ):
         print(line)

@@ -1,7 +1,8 @@
 """SparkSession construction for the engine.
 
-One place to set the configs that matter for both the local[32] test
-harness and a real multi-executor cluster:
+One place to set the configs that matter for both the local test
+harness (local[$SPARK_GRAFT_CPUS], all local cores when unset) and a
+real multi-executor cluster:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion) — the scale levers SURVEY §4 calls out.

@@ -316,9 +316,7 @@ def test_orc_roundtrip_matches_parquet(spark, tmp_path):
     """ORC interchange: write the documents projection as ORC, read it
     back, rows identical — and the ORC scan still takes pushed filters
     (same vectorized-columnar contract as the parquet store)."""
-    import contextlib
-    import io
-
+    from eurovision_spark.obs import plan_text
     from eurovision_spark.sinks import write_orc
 
     src = load_table(spark, SF, "documents").select("doc_id", "lang", "n_chars")
@@ -327,10 +325,8 @@ def test_orc_roundtrip_matches_parquet(spark, tmp_path):
     back = spark.read.orc(orc_dir)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.filter(F.col("n_chars") > 100).explain("formatted")
-    assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,100)]" in buf.getvalue()
+    plan = plan_text(back.filter(F.col("n_chars") > 100))
+    assert "PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,100)]" in plan
 
 
 def test_parquet_schema_evolution_on_read(spark, tmp_path):

@@ -11,23 +11,18 @@ into a cartesian product.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 
 from eurovision_spark.catalog import registry
+from eurovision_spark.obs import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def plan_of(spark, name: str) -> str:
-    df = registry()[name].fn(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return plan_text(registry()[name].fn(spark, SF_DIR))
 
 
 def test_flagship_broadcasts_dims_and_pushes_predicate(spark):
@@ -144,10 +139,7 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
             spark.table("b_lineitem"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(j)
         assert "SortMergeJoin" in plan
         assert n_exchanges(plan) == 0  # bucketing replaced the shuffle
         assert j.count() == li.count()
@@ -183,10 +175,7 @@ def test_partitioned_write_prunes_at_scan(spark, tmp_path):
     )
     write_parquet(o, str(tmp_path / "by_month"), partition_by=["month"])
     r = spark.read.parquet(str(tmp_path / "by_month")).filter(F.col("month") == "1997-03")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        r.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(r)
     assert "PartitionFilters: [isnotnull(month" in plan
     got = r.select(F.countDistinct("month")).first()[0]
     assert got == 1
@@ -250,10 +239,7 @@ def test_parse_pipeline_is_jvm_only(spark, tmp_path):
     fix = str(tmp_path / "plan_fixture.txt")
     write_registry(fix, 30)
     for name, df in parse_registry(spark, fix).items():
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(df)
         for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "CartesianProduct"):
             assert bad not in plan, f"{bad} in {name} plan"
 
@@ -271,10 +257,7 @@ def test_parse_pipeline_has_no_data_sized_single_partition_step(spark, tmp_path)
     fix = str(tmp_path / "plan_fixture2.txt")
     write_registry(fix, 30)
     for name, df in parse_registry(spark, fix).items():
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(df)
         lines = plan.splitlines()
         for i, ln in enumerate(lines):
             if "SinglePartition" not in ln:
@@ -607,14 +590,14 @@ def test_verified_near_edge_pipeline_stays_equi(spark):
 
     sets0 = copies_shingle_sets(spark, SF_DIR)
     sig = sets0.select("doc_id", minhash_from_hashes(F.col("hs")).alias("minhashes"))
-    cand_plan = _fmt(_lsh_candidate_pairs(sig))
+    cand_plan = plan_text(_lsh_candidate_pairs(sig))
     sets0.unpersist()
     assert "CartesianProduct" not in cand_plan
     assert "BroadcastNestedLoopJoin" not in cand_plan
     assert cand_plan.count("Exchange") >= 1  # the one banded bucket shuffle
 
     edges, sets, _ = near_edges_plan(docs_with_copies(spark, SF_DIR))
-    plan = _fmt(edges)
+    plan = plan_text(edges)
     sets.unpersist()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -657,7 +640,7 @@ def test_lsh_verify_flips_to_shuffled_hash_when_dense(spark, monkeypatch):
     def edge_rows(limit):
         monkeypatch.setattr(dd, "PAIR_BROADCAST_LIMIT", limit)
         edges, sets, _ = dd.near_edges_plan(docs, threshold=None, with_jaccard=True)
-        plan = _fmt(edges)
+        plan = plan_text(edges)
         got = sorted(map(tuple, edges.collect()))
         sets.unpersist()
         return plan, got
@@ -720,10 +703,7 @@ def test_bucketed_signature_store_probe_is_exchange_free(spark, tmp_path):
         j = spark.table("b_sigstore").join(
             arriving, F.col("band_sig") == F.col("i_band_sig")
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
+        plan = plan_text(j)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         # exactly the probe side exchanges; the store side scan is
         # bucket-aligned (an all-sides-shuffle plan would show 2)
@@ -732,13 +712,6 @@ def test_bucketed_signature_store_probe_is_exchange_free(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS b_sigstore")
-
-
-def _fmt(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_quality_classifier_scoring_is_shuffle_free(spark):
@@ -752,7 +725,7 @@ def test_quality_classifier_scoring_is_shuffle_free(spark):
 
     w, b = train_quality_model(spark, SF_DIR)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter("n_chars > 0")
-    plan = _fmt(score_documents(docs, w, b))
+    plan = plan_text(score_documents(docs, w, b))
     assert "Exchange" not in plan
     assert "CartesianProduct" not in plan
 
@@ -798,7 +771,7 @@ def test_span_dedup_exchanges_are_hash_or_id_keyed(spark):
     )
 
     br = block_rows(docs_with_copies(spark, SF_DIR))
-    decision = _fmt(block_removals(br, block_survivors(br)))
+    decision = plan_text(block_removals(br, block_survivors(br)))
     assert "CartesianProduct" not in decision
     for m in re.finditer(r"Exchange hashpartitioning\(([^,)]+)", decision):
         key = m.group(1).split("#")[0].strip()
@@ -894,7 +867,7 @@ def test_mad_outliers_sample_is_group_limited_and_stats_broadcast(spark):
     o = load_table(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    sample_plan = _fmt(win_sample(o))  # checkpointed inside the op
+    sample_plan = plan_text(win_sample(o))  # checkpointed inside the op
     assert sample_plan.count("WindowGroupLimit") >= 2
     plan = plan_of(spark, "mad_outliers")
     assert "BroadcastHashJoin" in plan
@@ -1084,11 +1057,9 @@ def test_payload_tier_byte_guard_demotes_wide_rows(spark):
         out, _ = dd.adaptive_verify_join(
             s1, pairs, s2, payload_row_bytes=payload_row_bytes
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            out.explain("formatted")
+        plan = plan_text(out)
         got = sorted((r.doc_id_1, r.doc_id_2) for r in out.collect())
-        return buf.getvalue(), got
+        return plan, got
 
     plan_payload, got_payload = run(dd.PAYLOAD_ROW_BYTES_HINT)
     assert "ShuffledHashJoin" not in plan_payload  # zero-exchange tier
@@ -1115,7 +1086,7 @@ def test_embedding_near_dup_large_table_verify_uses_the_counted_valve(
     monkeypatch.setattr(sim, "VEC_BCAST_BYTES", 0)
     monkeypatch.setattr(dd, "PAIR_BROADCAST_LIMIT", 0)
     df = fn(spark, SF_DIR)
-    plan = _fmt(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
     assert want and sorted(map(tuple, df.collect())) == want
@@ -1278,10 +1249,7 @@ def test_search_export_reuses_sorted_sheet_without_shuffle_or_sort(spark, tmp_pa
     search_and_export(tables).collect()  # builds the sheet
 
     df = search_and_export(tables, trial_where="condition = 'diabetes'")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_text(df)
     assert "LeftSemi" in plan
     assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
     assert not re.search(r"\bSort\b", plan), plan

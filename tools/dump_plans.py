@@ -5,8 +5,6 @@ Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
 
 from __future__ import annotations
 
-import contextlib
-import io
 import sys
 from pathlib import Path
 
@@ -31,19 +29,13 @@ programmatically in tests/test_plans.py):
 """
 
 
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue().strip()
-
-
 def main() -> None:
     import tempfile
 
     from bench import HEADLINE
     from eurovision_spark import get_spark
     from eurovision_spark.catalog import registry
+    from eurovision_spark.obs import plan_text
     from eurovision_spark.operators.parse import parse_registry
     from tools.gen_registry import write_registry
 
@@ -62,7 +54,7 @@ def main() -> None:
         "shard_invalidation",
     ]
     for name in HEADLINE + extras:
-        out.append(f"\n## {name}\n\n```\n{_plan(specs[name].fn(spark, SF_DIR))}\n```\n")
+        out.append(f"\n## {name}\n\n```\n{plan_text(specs[name].fn(spark, SF_DIR))}\n```\n")
 
     # the ingest pipeline's four output-table plans (tiny fixture —
     # plan SHAPE is input-size independent); the scale claims here are
@@ -72,7 +64,7 @@ def main() -> None:
         fix = f"{td}/fixture.txt"
         write_registry(fix, 30)
         for name, df in parse_registry(spark, fix).items():
-            out.append(f"\n## ingest: {name} table\n\n```\n{_plan(df)}\n```\n")
+            out.append(f"\n## ingest: {name} table\n\n```\n{plan_text(df)}\n```\n")
 
     out.append(_near_dup_bucket_distribution(spark))
 

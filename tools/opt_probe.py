@@ -3,7 +3,8 @@
 For each requested query (default: bench.HEADLINE) this measures, in one
 local[$SPARK_GRAFT_CPUS] session at $SPARK_GRAFT_SF_DIR:
 
-- warm noop-sink seconds (min of 2 post-compilation runs, +1 adaptive);
+- cold and warm noop-sink seconds (eurovision_spark.obs's rep policy:
+  min of 2 post-compilation runs, +1 adaptive, +1 load-suspect re-time);
 - the number of Spark jobs one warm run launches (job-group counting —
   on this box a trivial job costs ~0.17-0.3s of pure scheduling, so job
   count bounds warm time below: the first thing to shrink);
@@ -19,23 +20,13 @@ Writes one JSON line per query to stdout and a summary at the end.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
 import re
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-
-def plan_text(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue().strip()
 
 
 def plan_counters(plan: str) -> dict:
@@ -69,58 +60,33 @@ def main() -> None:
     from bench import HEADLINE
     from eurovision_spark import get_spark
     from eurovision_spark.catalog import registry
+    from eurovision_spark.obs import Probe, plan_text
 
     if not names:
         names = list(HEADLINE)
     spark = get_spark("opt_probe")
-    sc = spark.sparkContext
+    probe = Probe(spark.sparkContext)
     specs = registry()
     if plans_dir:
         plans_dir.mkdir(parents=True, exist_ok=True)
 
     # floor: what a trivial job costs on this box right now
-    floor_runs = []
-    for _ in range(5):
-        t0 = time.time()
-        sc.parallelize([0], 1).count()
-        floor_runs.append(time.time() - t0)
-    floor = round(min(floor_runs), 3)
+    floor = probe.floor(5)
     print(json.dumps({"floor_sec": floor}), flush=True)
 
     rows = []
     for name in names:
         fn = specs[name].fn
         try:
-            df = fn(spark, sf_dir)
-            plan = plan_text(df)
+            plan = plan_text(fn(spark, sf_dir))
             if plans_dir:
                 (plans_dir / f"{name}_{tag}.txt").write_text(plan + "\n", "utf8")
-            # cold (also pays any per-query sample collects / codegen)
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold = round(time.time() - t0, 3)
-            runs = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            if max(runs) > 1.3 * min(runs):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            warm = round(min(runs), 3)
-            # job count of one full warm run (build + execute)
-            gid = f"probe-{name}"
-            sc.setJobGroup(gid, name)
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs = len(sc.statusTracker().getJobIdsForGroup(gid))
+            t = probe.time(lambda: fn(spark, sf_dir))
+            jobs = probe.jobs(lambda: fn(spark, sf_dir))
             row = {
                 "q": name,
-                "warm": warm,
-                "cold": cold,
+                "warm": t.warm,
+                "cold": t.cold,
                 "jobs": jobs,
                 "bound": round(jobs * floor, 2),
                 **plan_counters(plan),

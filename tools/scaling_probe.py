@@ -5,7 +5,8 @@ Usage: python tools/scaling_probe.py  (writes SCALING.md at the repo root)
 The plan tests assert the SHAPE that survives scale (broadcasts,
 bounded shuffles, partial aggregation); this measures the consequence:
 warm wall time for representative headline queries across a 100x data
-range (sf0.001 -> sf0.1) on the same local[32] session — and for the
+range (sf0.001 -> sf0.1) in one local[$SPARK_GRAFT_CPUS] session (all
+local cores when unset), timed by eurovision_spark.obs — and for the
 documents/embeddings-based dedup/ANN queries a 10x tier on top of
 sf0.1 (tools/gen_x10.py: fresh same-distribution data, auto-generated
 if absent), stretching THEIR lever to 1000x. A plan that re-scans,
@@ -16,7 +17,6 @@ super-linear growth here.
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -106,26 +106,10 @@ QUERIES = [
 ]
 
 
-def _warm_min(fn, spark, sf_dir: str) -> float:
-    """min of 2 warm runs — plus a third when the two disagree by >30%
-    (r09: this box takes BURSTY external load; a burst that eats one
-    run otherwise lands in the table as a fake regression, the exact
-    artifact that polluted the r08 driver bench)."""
-    runs = []
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
-    if max(runs) > 1.3 * min(runs):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(time.time() - t0)
-    return min(runs)
-
-
 def main() -> None:
     from eurovision_spark import get_spark
     from eurovision_spark.catalog import registry
+    from eurovision_spark.obs import Probe
 
     if not (X10_DIR / "documents.parquet").exists():
         from tools.gen_x10 import main as gen
@@ -133,6 +117,8 @@ def main() -> None:
         gen()
 
     spark = get_spark("scaling-probe")
+    probe = Probe(spark.sparkContext)
+    probe.floor(5)  # the session's quiet floor, the burst re-time's baseline
     specs = registry()
     rows = []
     for name, family, x10 in QUERIES:
@@ -141,8 +127,7 @@ def main() -> None:
         scales = SFS + (["x10"] if x10 else [])
         for sf in scales:
             sf_dir = str(X10_DIR) if sf == "x10" else f"/root/testdata/sf{sf}"
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # compile
-            times[sf] = _warm_min(fn, spark, sf_dir)
+            times[sf] = probe.time(lambda: fn(spark, sf_dir)).warm
         rows.append((name, family, times))
 
     # duplicate-heavy x10 tier for the entity-resolution blocking: real
@@ -153,12 +138,11 @@ def main() -> None:
     # formulation stays output-bound.
     fn = specs["id_typo_pairs"].fn
     dup_dir = str(X10_DIR / "dup")
-    fn(spark, dup_dir).write.format("noop").mode("overwrite").save()
     rows.append(
         (
             "id_typo_pairs (dup-heavy)",
             "same plan, exact-duplicate-dominated names: one hot name x1500 + 40% in classes of 10",
-            {"x10": _warm_min(fn, spark, dup_dir)},
+            {"x10": probe.time(lambda: fn(spark, dup_dir)).warm},
         )
     )
 
@@ -166,8 +150,12 @@ def main() -> None:
     with out.open("w") as fh:
         fh.write(
             "# SCALING — warm query time vs data scale\n\n"
-            "Auto-generated by `tools/scaling_probe.py` (min of 2 warm runs,\n+1 adaptive run when they disagree >30% — bursty-load guard;\n"
-            "per scale, noop sink, one local[32] session). sf0.001 -> sf0.1\n"
+            "Auto-generated by `tools/scaling_probe.py` (min of 2 warm runs,\n"
+            "+1 adaptive run when they disagree >30%, +1 load-suspect re-time\n"
+            "when they disagree >2x while the floor probe reads inflated —\n"
+            "eurovision_spark.obs's bursty-load guard; per scale, noop sink,\n"
+            "one local session, defaultParallelism "
+            f"{spark.sparkContext.defaultParallelism}). sf0.001 -> sf0.1\n"
             "is a 100x data range; documents/embeddings-based queries add a\n"
             "x10 tier over sf0.1 (tools/gen_x10.py — fresh same-distribution\n"
             "data, NOT duplicated rows, so dedup candidate counts stay\n"
